@@ -14,8 +14,9 @@ import graft.config.{AppConfig, NodeConf}
   *   - source→roots broadcast + parent→children replication
   *     (`executor/executor.go:183-186`, `node/node.go:190-194`): the
   *     same DataFrame is reused by every consumer; when a node has >1
-  *     consumer (children + error handler) its input is persisted in
-  *     batch mode so the upstream work runs once.
+  *     active child its output is persisted in batch mode so the
+  *     upstream work runs once. The error handler is not a consumer of
+  *     the output: it reads the dead-letter lineage of the node's input.
   *   - per-node workers (`executor/executor.go:319-337`): a partition
   *     floor — the node's input is repartitioned up when it plans to
   *     fewer partitions than its configured workers (see buildNode).
@@ -50,7 +51,7 @@ object Pipeline {
   final case class Built(
       source: DataFrame,
       roots: List[BuiltNode],
-      /** every frame this build persisted (shared source + multi-consumer
+      /** every frame this build persisted (shared source + multi-child
         * node outputs) — streaming callers MUST unpersist these after each
         * micro-batch or a long-running stream accumulates cached blocks */
       persisted: List[DataFrame] = Nil) {
@@ -218,10 +219,11 @@ object Pipeline {
     // the reference never delivers.
     val activeChildren =
       if (stage.terminal) Nil else conf.children.filterNot(_.disabled)
-    val consumers = activeChildren.size + (if (conf.errorHandler.isDefined) 1 else 0)
+    // Only the children read the output; the error handler reads
+    // split.deadLetters, a separate lineage from this node's input.
     val out0 = split.output
     val out =
-      if (consumers > 1 && persistShared) {
+      if (activeChildren.size > 1 && persistShared) {
         val p = out0.persist(StorageLevel.MEMORY_AND_DISK)
         persisted += p; p
       } else out0

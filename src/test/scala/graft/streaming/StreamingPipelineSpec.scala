@@ -321,4 +321,101 @@ class StreamingPipelineSpec extends SparkSpec {
       observeMetrics = false, persistShared = false)
     assert(built1.find("resultsnode").get.output.count() == 7L)
   }
+
+  test("only nodes with several children persist their output; an error handler is no consumer") {
+    val s = spark
+    import s.implicits._
+    val reg = Registry.builtins()
+    // the async dead-letter tree: every node has one child, and two of
+    // them an error handler, which reads the dead letters of the node's
+    // input rather than its output
+    val kit = AppConfig.parse(
+      """application: persisttest
+        |source:
+        |  name: stringsource
+        |  params: {path: unused}
+        |nodes:
+        |  - name: filternode
+        |    children:
+        |      - name: errornode
+        |        error_handler:
+        |          name: errorkafkaproducer
+        |          params: {topic: kit-errors}
+        |        children:
+        |          - name: asyncrpcnode
+        |            params: {error_prefix: rpcfail, filter_prefix: skip, max_in_flight: "4"}
+        |            error_handler:
+        |              name: errorkafkaproducer
+        |              params: {topic: rpc-errors}
+        |            children:
+        |              - name: fanoutnode
+        |                params: {copies: "3"}
+        |                children:
+        |                  - name: stringtoproducerequestnode
+        |                    params: {topic: kit-out}
+        |                    children:
+        |                      - name: kafkaproducer
+        |                        id: kitproducer
+        |""".stripMargin, reg).fold(e => sys.error(e), identity)
+    // 200 events, per 20: 2 filtered, 3 errored, 3 RPC failures, 1 RPC skip, 11 ok
+    def payload(i: Int): String = (i % 20 match {
+      case 0 | 1 => "filterme"
+      case 2 | 3 | 4 => "error"
+      case 5 | 6 | 7 => "rpcfail"
+      case 8 => "skip"
+      case _ => "ok"
+    }) + s"-$i"
+    val events = (0 until 200).map(payload)
+    val ts = Timestamp.valueOf("2024-01-01 00:00:00")
+
+    val batch = events.toDF("payload").select(col("payload"), lit(ts).as("created"), lit(false).as("recovery"))
+    val built = graft.pipeline.Pipeline.buildOn(batch, kit.nodes, reg)
+    assert(built.persisted.isEmpty)
+    // a node with two children still persists its output once
+    val syslog = AppConfig.parse(
+      """application: persisttest
+        |source:
+        |  name: parquetsource
+        |  params: {path: unused}
+        |nodes:
+        |  - name: syslogparser
+        |    error_handler:
+        |      name: errorkafkaproducer
+        |      params: {topic: syslog-errors}
+        |    children:
+        |      - name: jsonbuilder
+        |      - name: docbuilder
+        |""".stripMargin, reg).fold(e => sys.error(e), identity)
+    val lines = Seq("<13>2024-01-01T00:00:00Z h p[1]: a", "garbage").toDF("payload")
+      .select(col("payload").cast("binary").as("payload"), lit(ts).as("created"), lit(false).as("recovery"))
+    val built2 = graft.pipeline.Pipeline.buildOn(lines, syslog.nodes, reg)
+    try assert(built2.persisted.size == 1)
+    finally built2.unpersistAll()
+
+    // sink rows and node counters of one micro-batch through the kit tree
+    val metrics = new PipelineMetrics(s).install()
+    val input = MemoryStream[String](s)
+    val source = input.toDF().select(col("value").as("payload"), lit(ts).as("created"), lit(false).as("recovery"))
+    val sinks = Seq("kitproducer", "errornode.errors", "asyncrpcnode.errors").map(_ -> new CollectingSink).toMap
+    val running = StreamingPipeline.run(source, kit, reg, sinks = sinks, trigger = Trigger.ProcessingTime(0L))
+    try {
+      input.addData(events)
+      running.query.processAllAvailable()
+      assert(sinks.map { case (id, sink) => id -> sink.rows.size } ==
+        Map("kitproducer" -> 330, "errornode.errors" -> 30, "asyncrpcnode.errors" -> 30))
+      val deadline = System.currentTimeMillis() + 10000
+      while (metrics.nodeCounts("kitproducer")._1 == 0 && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      // errornode's emitted counter sits above the async node's
+      // checkpoint, which truncates it from the plan (Pipeline.buildNode)
+      assert(Seq("filternode", "errornode", "asyncrpcnode", "fanoutnode", "stringtoproducerequestnode",
+        "kitproducer").map(id => id -> metrics.nodeCounts(id)) == Seq(
+        "filternode" -> ((200L, 180L)), "errornode" -> ((180L, 0L)), "asyncrpcnode" -> ((150L, 110L)),
+        "fanoutnode" -> ((110L, 330L)), "stringtoproducerequestnode" -> ((330L, 330L)),
+        "kitproducer" -> ((330L, 330L))))
+    } finally {
+      running.shutdown()
+      metrics.uninstall()
+    }
+  }
 }
