@@ -30,24 +30,10 @@ object Bench {
     */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
     val subsecReps = sys.env.getOrElse("SPARK_GRAFT_SUBSEC_REPS", "7").toInt.max(reps)
     val subsecThresh = sys.env.getOrElse("SPARK_GRAFT_SUBSEC_THRESH", "1.75").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // r12: Spark's Janino class cache is bounded at 100 entries by
-      // default; a 164-query suite cycles far more generated classes
-      // than that, forcing recompiles (and re-JIT) of code that was
-      // already warm. Size it to hold the whole suite.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // warm the JVM (codegen, parquet reader, shuffle paths) so the first
     // query's warmup rep doesn't also pay session startup; touch every
     // table so no query pays the first footer read for its input

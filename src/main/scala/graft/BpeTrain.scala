@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Merge-table trainer CLI:
   * `runMain graft.BpeTrain <parquet> <textCol> <numMerges> <out.txt>`.
   *
@@ -17,15 +15,7 @@ object BpeTrain {
   def main(args: Array[String]): Unit = {
     require(args.length == 4,
       "usage: BpeTrain <input.parquet> <textCol> <numMerges> <out merges.txt>")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val merges = graft.functions.Bpe.train(
       spark.read.parquet(args(0)), args(1), numMerges = args(2).toInt)
     val out = new java.io.PrintWriter(args(3), "UTF-8")

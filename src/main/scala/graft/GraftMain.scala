@@ -32,12 +32,7 @@ object GraftMain {
       System.err.println("usage: GraftMain <config.yaml> <outDir> [--stream]")
       sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      .appName("graft")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     run(spark, args(0), args(1), args.contains("--stream")) match {
       case Left(err) => System.err.println(err); sys.exit(1)
       case Right(summary) => println(summary)

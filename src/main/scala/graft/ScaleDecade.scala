@@ -1,71 +1,37 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** One-decade extension of [[ScaleProbe]]: the curvature claims in
-  * SCALING.md were measured up to 8× the sf0.1 corpus (40k docs); this
-  * probe pushes the CAPPED families one more decade — 64× (320k docs,
-  * ~sf1 territory) for the text operators and 1M vectors for the ANN
-  * build — where an un-capped quadratic would be minutes-to-hours and
-  * the caps must visibly bind instead.
+import ScaleCorpus.{best, time}
+
+/** Scale-curvature probe: each axis runs one operator family on 1×→8×
+  * or 1×→64× synthetic growth and prints its warm cost and output size,
+  * so the SCALING.md claims ("bucketed, never quadratic"; "the cap binds
+  * and holds the curve") rest on measured curves, not only plan shape.
+  * The 64× axes (320k docs, ~sf1 territory, and 1M vectors) are where an
+  * uncapped quadratic would take minutes to hours.
   *
-  * Corpora are generated in-process, seeded and deterministic (no
-  * rand()): the driver's sf0.1 documents replicated with per-replica
-  * word salting (constant organic dup rate) plus the 10% shared
-  * boilerplate that makes caps bind, exactly the ScaleProbe massdup
-  * recipe; embeddings are the same id-hashed synthetic family with a
-  * 10% boilerplate direction.
+  * Corpora come from [[ScaleCorpus]], seeded and deterministic (no
+  * rand()): `curves` reads organic replicas of the documents, the capped
+  * text axes the mass-duplicate corpus, the vector axes the synthetic
+  * embedding family.
   *
-  * `runMain graft.ScaleDecade /root/testdata/sf0.1 [axisPrefix]` — a
-  * measurement tool, not part of the driver contract. The optional
-  * second arg re-measures one axis family (e.g. `warcfacets`) without
-  * paying the full ~12-minute sweep.
+  * `runMain graft.ScaleDecade <sfDir> [axisPrefix]` runs every axis
+  * whose name starts with the prefix (all of them by default, a long
+  * sweep). Measurement only: no query or test depends on it.
   */
 object ScaleDecade {
   def main(args: Array[String]): Unit = {
     val only: Option[String] = args.drop(1).headOption
     def axis(name: String)(body: => Unit): Unit =
       if (only.forall(name.startsWith)) body
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     spark.range(1000000).selectExpr("sum(id)").collect()
-    def time(f: => Long): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    /** warm + best-of-2 (tightest bound on the true cost). */
-    def best(f: => Long): (Double, Long) = {
-      var n = 0L
-      time { n = f; n }
-      (math.min(time(f), time(f)), n)
-    }
 
     val base = spark.read.parquet(s"${args(0)}/documents.parquet")
       .select("doc_id", "text")
-    val boiler = ("breaking news subscribe to our newsletter all rights reserved " * 6).trim
-    def corpus(mult: Int): DataFrame =
-      (0 until mult).map(i => base.select(
-          (col("doc_id") + lit(i * 100000000L)).as("doc_id"),
-          when(pmod(col("doc_id"), lit(10)) === 0, lit(boiler))
-            .otherwise(concat(col("text"), lit(" r" + i))).as("text")))
-        .reduce(_ union _)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(true)
-    def syntheticEmb(n: Long): DataFrame = spark.range(n).select(
-        col("id").as("vec_id"),
-        when(pmod(col("id"), lit(10)) === 0,
-          expr("transform(sequence(0, 15), j -> CAST(1.0 + j AS FLOAT))"))
-          .otherwise(expr(
-            "transform(sequence(0, 15), j -> CAST(((id * 31 + j * 7919) % 1000 - 500) / 500.0 AS FLOAT))"))
-          .as("embedding"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .localCheckpoint(true)
+    def corpus(mult: Int): DataFrame = ScaleCorpus.massDup(base, mult)
+    def syntheticEmb(n: Long): DataFrame = ScaleCorpus.embeddings(spark, n)
 
     // fixed probe set: one per 1000 base docs, never grows with mult
     val queries = base.filter(pmod(col("doc_id"), lit(1000L)) === 0)
@@ -112,8 +78,15 @@ object ScaleDecade {
         val (semS, semSN) = best(operators.Dedup.semanticPairs(
           e, "vec_id", "embedding", eps = 0.8, nList = nlScaled,
           maxListOccupancy = 1000L).count())
+        // uncapped, the boilerplate list's pair stage is quadratic: 128k
+        // would be the blow-up the guard exists to stop
+        val unc = if (n > 16000L) "uncapped=skipped(quadratic)" else {
+          val (t, c) = best(operators.Dedup.semanticPairs(
+            e, "vec_id", "embedding", eps = 0.8, nList = 16, maxListOccupancy = Long.MaxValue).count())
+          f"uncapped/nList16=$t%7.2f s ($c%9d pairs)"
+        }
         println(f"[decade] semdedup n=$n%7d capped@1000/nList16=$sem%7.2f s ($semN%9d pairs) " +
-          f"nList=$nlScaled%5d=$semS%7.2f s ($semSN%9d pairs)")
+          f"nList=$nlScaled%5d=$semS%7.2f s ($semSN%9d pairs) $unc")
         e.unpersist()
       }
     }
@@ -572,6 +545,195 @@ object ScaleDecade {
         println(f"[decade] ivf n=$n%8d build=$tBuild%7.2f s serve(1k probes)=$serve%7.2f s ($served%7d rows)")
         e.unpersist(); probes.unpersist()
       }
+    }
+
+    // The heavy dedup/ANN operators on 1×/2×/8× ORGANIC replicas: every
+    // curve must grow ~linearly (bucketed, never quadratic). Several of
+    // these operators are uncapped, so they read organicDocs, never the
+    // mass-duplicate corpus.
+    axis("curves") {
+      import operators.{Chunking, Dedup, Packing, Profile, QualityRules, TextSim}
+      val src = spark.read.parquet(s"${args(0)}/documents.parquet")
+      for (m <- Seq(1, 2, 8)) {
+        val d = ScaleCorpus.organicDocs(src, m)
+        // probe count held constant: one per 1000 docs of replica 0
+        val probes = d.filter(pmod(col("doc_id"), lit(1000L)) === 0 && col("doc_id") < ScaleCorpus.Stride)
+        val ops = Seq[(String, () => Long)](
+          "ngram_jaccard" -> (() => Dedup.ngramJaccardPairs(
+            d, "doc_id", "text", n = 3, num = 1, den = 10, maxShingleFreq = 1000L).count()),
+          "minhash_lsh" -> (() => Dedup.minhashLshCandidates(d, "doc_id", "text", n = 3, k = 8, bands = 2).count()),
+          "simhash32" -> (() => Dedup.simhashPairs(d, "doc_id", "text", n = 3, maxHamming = 3).count()),
+          "simhash63" -> (() => Dedup.simhashPairs63(d, "doc_id", "text", n = 3, maxHamming = 3).count()),
+          "components" -> (() => Dedup.connectedComponents(
+            Dedup.minhashLshCandidates(d, "doc_id", "text", n = 3, k = 8, bands = 2), "da", "db").count()),
+          "tfidf" -> (() => TextSim.tfidfCosinePairs(
+            d, "doc_id", "text", tNum = 9, tDen = 10, maxTermDocs = 1000L).count()),
+          "pack" -> (() => Packing.packOffsets(spark, Chunking.chunk(d, "doc_id", "text", 64, 16),
+            "doc_id", "chunk_idx", "n_tokens", budget = 2048L, buckets = 32).count()),
+          "spans" -> (() => Dedup.repeatedSpans(d, "doc_id", "text", n = 5, minDocs = 2L).count()),
+          // round 8: CDC chunking is a pure map; BM25 is posting-bound;
+          // KMV and sample quantiles are k-bounded aggregations
+          "cdc" -> (() => Chunking.cdcChunks(d, "doc_id", "text", avgWords = 16).count()),
+          "bm25" -> (() => TextSim.bm25TopK(
+            d, "doc_id", "text", probes, "doc_id", "text", k = 10, maxTermDocs = 1000L).count()),
+          "kmv" -> (() => Profile.distinctKmv(d, Seq("source"), "text", k = 64).count()),
+          "squant" -> (() => Profile.sampleQuantiles(d, Seq("source"), "doc_id", "n_chars", k = 256).count()),
+          // round 9: bigram-LM scoring (count shuffles + join back), and
+          // the stateful LSH batch drive whose maxBucket guard must hold
+          "lm" -> (() => QualityRules.bigramLmScore(d, "doc_id", "text").count()),
+          "neardup_stateful" -> (() => streaming.StatefulOps.streamingNearDupCandidates(
+            d, "doc_id", "text", n = 3, k = 8, bands = 2, maxBucket = 1000).toDF().count()))
+        println(f"[decade] curves ${m}x docs=${d.count()}%7d " +
+          ops.map { case (k, f) => f"$k=${best(f())._1}%6.2f" }.mkString(" "))
+        d.unpersist()
+      }
+    }
+
+    // 10% of docs share ONE boilerplate text, so the shared band bucket
+    // grows linearly and UNCAPPED candidate volume quadratically: the
+    // band-occupancy cap (star-pairing to the bucket min) must hold
+    // output linear; on simhash the identical-fingerprint cluster makes
+    // the plain blocked join quadratic and the collapsed variant must
+    // star-pair it
+    axis("massdup") {
+      import operators.Dedup
+      for (m <- Seq(1, 2, 8)) {
+        val d = corpus(m)
+        def lsh(cap: Long) = best(Dedup.minhashLshCandidates(
+          d, "doc_id", "text", n = 3, k = 8, bands = 2, maxBandOccupancy = cap).count())
+        val (tU, nU) = lsh(Long.MaxValue)
+        val (tC, nC) = lsh(1000L)
+        val (tP, nP) = best(Dedup.simhashPairs63(d, "doc_id", "text", n = 3, maxHamming = 3).count())
+        val (tS, nS) = best(Dedup.simhashPairs63Collapsed(d, "doc_id", "text", n = 3, maxHamming = 3).count())
+        println(f"[decade] massdup ${m}x uncapped=$tU%6.2f s ($nU%9d pairs) capped@1000=$tC%6.2f s ($nC%9d pairs) " +
+          f"simhash63=$tP%6.2f s ($nP%9d pairs) collapsed=$tS%6.2f s ($nS%9d pairs)")
+        d.unpersist()
+      }
+    }
+
+    // common spans on the mass-dup corpus: each boilerplate shingle
+    // occurs in 0.1·n docs, so UNCAPPED pair volume is quadratic
+    // (measured at 1×/2× only); maxDocsPerShingle=50 must hold output
+    // and runtime near-linear
+    axis("cspans") {
+      for (m <- Seq(1, 2, 8)) {
+        val d = corpus(m)
+        def spans(cap: Long) = best(operators.Dedup.commonSpans(
+          d, "doc_id", "text", n = 5, minSpan = 8, maxDocsPerShingle = cap).count())
+        val (tC, nC) = spans(50L)
+        val unc = if (m > 2) "uncapped=skipped(quadratic)"
+          else { val (tU, nU) = spans(Long.MaxValue); f"uncapped=$tU%6.2f s ($nU%9d spans)" }
+        println(f"[decade] cspans ${m}x capped@50=$tC%6.2f s ($nC%9d spans) $unc")
+        d.unpersist()
+      }
+    }
+
+    // pathological-chain components: a 20k-vertex path graph has
+    // diameter 20k, so pure min-label propagation would need 20k rounds;
+    // the auto-switch hands it to star contraction after `switchAfter`
+    // rounds. prop-only stops at maxIters unconverged: its time is the
+    // per-round cost the switch avoids.
+    axis("chain") {
+      val chain = spark.range(0L, 20000L).select(col("id").as("da"), (col("id") + 1).as("db"))
+        .localCheckpoint(true)
+      for ((switchAfter, label) <- Seq(5 -> "auto-switch", 60 -> "prop-only")) {
+        var st: operators.Dedup.CcStats = null
+        val t = time {
+          val (out, s) = operators.Dedup.connectedComponentsWithStats(
+            chain, "da", "db", maxIters = 60, switchAfter = switchAfter)
+          st = s
+          out.count()
+        }
+        println(f"[decade] chain $label%-12s $t%6.2f s " +
+          s"(propRounds=${st.propRounds} switched=${st.switchedToStar})")
+      }
+    }
+
+    // ANN serving shape: (a) ONE hot probe over a growing corpus, the
+    // SAME materialized candidate frame selected by the k-bounded
+    // graft_topk aggregate vs a row_number() window (the window funnels
+    // the probe's whole candidate list through one task's sort, the
+    // aggregate partial-combines to k rows per partition); (b) the
+    // shipped ivfJoin at 1/32/1024 probes on a fixed corpus: the index
+    // build is the constant term, probe cost must grow ~linearly
+    axis("annsel") {
+      import org.apache.spark.sql.expressions.Window
+      import operators.Similarity
+      import functions.{Kernels, TopK}
+      for (m <- Seq(1, 2, 8)) {
+        val corpus = ScaleCorpus.embeddings(spark, 32000L * m, boilerplate = false)
+        val unit = Similarity.unitNorm(
+          Similarity.ivfCentroids(corpus, "vec_id", "embedding", nList = 16, iters = 2))
+        val c = corpus.select(col("vec_id").as("nid"), col("embedding").as("nvec"))
+          .withColumn("list", Kernels.ivfAssign(col("nvec"), unit))
+        val pLists = corpus.filter(col("vec_id") === 3L)
+          .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
+            posexplode(Kernels.ivfScores(col("embedding"), unit)).as(Seq("c", "s")))
+          .orderBy(col("s").desc, col("c").asc).limit(4)
+          .select(col("qid"), col("qvec"), col("c").as("list"))
+        val cand = pLists.join(c, Seq("list")).filter(col("qid") =!= col("nid"))
+          .select(col("qid"), col("nid"), Kernels.vecDot(col("qvec"), col("nvec")).as("cos"))
+          .localCheckpoint(true)
+        val nCand = cand.count()
+        val (tAgg, _) = best(cand.groupBy("qid").agg(TopK.topkPairsDouble(col("cos"), col("nid"), 10).as("tk"))
+          .select(explode(col("tk"))).count())
+        val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid").asc)
+        val (tWin, _) = best(cand.withColumn("rank", row_number().over(w)).filter(col("rank") <= 10).count())
+        println(f"[decade] annsel ${m}x cand=$nCand%8d agg=$tAgg%6.2f s window=$tWin%6.2f s")
+        corpus.unpersist()
+      }
+      val corpus = ScaleCorpus.embeddings(spark, 256000L, boilerplate = false)
+      for (p <- Seq(1, 32, 1024)) {
+        val probes = corpus.filter(pmod(col("vec_id"), lit(256000L / p)) === 3L).localCheckpoint(true)
+        val (t, _) = best(Similarity.ivfJoin(probes, corpus, "vec_id", "embedding",
+          k = 10, nList = 16, nProbe = 4).count())
+        println(f"[decade] annserve probes=${probes.count()}%5d ivfJoin=$t%6.2f s")
+      }
+    }
+
+    // k-bounded top-k vs window rank on ONE hot key: both scan n rows,
+    // but the window funnels the hot key through a single task's sort
+    // while the aggregate partial-combines to k rows per partition
+    axis("topk") {
+      import org.apache.spark.sql.expressions.Window
+      for (m <- Seq(1, 2, 8)) {
+        val n = 1000000L * m
+        val d = spark.range(n).select(
+          when(pmod(col("id"), lit(100)) === 0, concat(lit("src"), pmod(col("id"), lit(7))))
+            .otherwise(lit("hot")).as("source"),
+          col("id"), pmod(col("id") * 2654435761L, lit(1000000L)).as("score"))
+          .localCheckpoint(true)
+        val (tAgg, _) = best(operators.Sampling.capPerGroup(d, "source", col("score"), "id", k = 100).count())
+        val w = Window.partitionBy("source").orderBy(col("score").desc, col("id").asc)
+        val (tWin, _) = best(d.withColumn("rn", row_number().over(w)).filter(col("rn") <= 100).count())
+        println(f"[decade] topk ${m}x rows=$n%9d agg=$tAgg%6.2f s window=$tWin%6.2f s")
+      }
+    }
+
+    // vector-LSH bucket cap on the duplicated embedding family (10% of
+    // 16k vectors share one direction): capped holds candidate volume
+    // flat where uncapped goes quadratic; candidate volume must drop
+    // geometrically as signature planes grow (2^(planes/tables) bucket
+    // values per table); the shipped lshTopK must carry the cap; IVF
+    // assign/score kernels must hold as nList grows
+    axis("embcap") {
+      import operators.Similarity
+      val emb = syntheticEmb(16000L)
+      def line(label: String)(f: => Long): Unit = {
+        val (t, n) = best(f)
+        println(f"[decade] embcap $label%-28s $n%10d rows in $t%6.2f s")
+      }
+      for ((label, cap) <- Seq("lsh uncapped" -> Long.MaxValue, "lsh capped@1000" -> 1000L))
+        line(label)(Similarity.lshCandidates(emb, "vec_id", "embedding", maxBucket = cap).count())
+      for (p <- Seq(16, 32, 60))
+        line(s"lsh planes=$p tables=4")(Similarity.lshCandidates(
+          emb, "vec_id", "embedding", planes = p, tables = 4).count())
+      for ((label, cap) <- Seq("lshTopK capped@1000" -> 1000L, "lshTopK uncapped" -> Long.MaxValue))
+        line(label)(Similarity.lshTopK(emb, "vec_id", "embedding", k = 10, maxBucket = cap).count())
+      for (nl <- Seq(16, 64, 256))
+        line(s"ivfTopK nList=$nl nProbe=${nl / 4}")(Similarity.ivfTopK(
+          emb, "vec_id", "embedding", k = 10, nList = nl, nProbe = nl / 4).count())
+      emb.unpersist()
     }
     spark.stop()
   }

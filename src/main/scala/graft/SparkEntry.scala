@@ -28,8 +28,4 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     all.collect { case (k, q) if q.oracle.isDefined => k -> q.oracle.get }
-
-  /** Subset used by Bench. */
-  def headline: Map[String, (SparkSession, String) => DataFrame] =
-    all.collect { case (k, q) if q.headline => k -> q.fn }
 }

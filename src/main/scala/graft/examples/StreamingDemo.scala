@@ -1,6 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.config.AppConfig
@@ -17,14 +16,7 @@ import graft.streaming.{PipelineMetrics, StreamingPipeline}
 object StreamingDemo {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val metrics = new PipelineMetrics(spark).install()
 
     val reg = Registry.builtins()

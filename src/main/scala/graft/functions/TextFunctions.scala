@@ -105,16 +105,8 @@ object TextFunctions {
     * fold(words, 7, (h,w) => (h*131 + charHash(w)) mod P), computed by
     * the codegen kernel [[Kernels.fingerprint]] (one JVM pass instead
     * of an interpreted lambda per character; bit-identical, parity-
-    * pinned in GraftFunctionsSpec against [[fingerprintExpr]]). */
+    * pinned in GraftFunctionsSpec against the HOF form, `FingerprintExpr`). */
   def fingerprint(text: Column): Column = Kernels.fingerprint(text)
-
-  /** the pure-`Column` higher-order-function form of [[fingerprint]] —
-    * kept as the parity reference the kernel is spec-pinned against. */
-  private[graft] def fingerprintExpr(text: Column): Column =
-    aggregate(
-      transform(words(text), w => charHash(w)),
-      lit(7L),
-      (acc, h) => pmod(acc * 131 + h, lit(P)))
 
   // ---- token counting ----
 

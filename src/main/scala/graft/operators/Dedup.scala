@@ -539,7 +539,7 @@ object Dedup {
       pairs: DataFrame, aCol: String, bCol: String,
       maxIters: Int = 20, switchAfter: Int = 5): (DataFrame, CcStats) = {
     // NOT under a scoped-AQE-off block: extending LinkRank's AQE-off
-    // discipline here was A/B'd in r17 (ProbeJobs showed ~3 AQE
+    // discipline here was A/B'd in r17 (`Tool time` showed ~3 AQE
     // stage-jobs per round; static planning cut dd_semdedup 31→18 and
     // dd_dedup_apply 20→9 jobs) and MEASURED SLOWER ACROSS THE BOARD —
     // dd_components 0.95→1.57 s, dd_dedup_apply_simhash 1.24→2.03 s,

@@ -160,7 +160,7 @@ object LinkRank {
     // O(1)-deep over a leaf. A persist-based variant keeps the DATA
     // cached but the PLAN compounds iteration over iteration, and the
     // driver ends up spending multi-second analysis/cache-lookup
-    // walls around ~50 ms of actual task work (ProbeWall on the
+    // walls around ~50 ms of actual task work (`Tool time` on the
     // oracle graph: 6 stages, 0.03 s task sum, 3.6-6.7 s wall
     // persist-based vs ~1.6-2.3 s with truncation). The SUPPORT
     // frames (capped edges, degrees) stay persist-based: their plans
@@ -209,7 +209,7 @@ object LinkRank {
     // checkpoint (`Dataset.observe` — an exact int64 sum collected by
     // the action the round already pays), so each iteration runs
     // exactly ONE job with no dangle-aggregation broadcast job and no
-    // crossJoin nodes in the round plan (ProbeJobs: ta_link_rank was
+    // crossJoin nodes in the round plan (`Tool time`: ta_link_rank was
     // 17 jobs / ta_link_rank_apply 19). Arithmetic is unchanged: the
     // driver-side div/mul are the same truncating int64 ops the SQL
     // expressions ran (all operands non-negative), and round 0's

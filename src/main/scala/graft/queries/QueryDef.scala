@@ -6,13 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * SQL-expressible) an equivalent DuckDB oracle over the same parquet
   * tables. Column names/aliases MUST match between the two — the driver
   * sorts columns by name before hashing values.
-  *
-  * `headline = true` marks queries included in the Bench run.
   */
-final case class Q(
-    fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    headline: Boolean = false)
+final case class Q(fn: (SparkSession, String) => DataFrame, oracle: Option[String])
 
 object Tables {
   import org.apache.spark.sql.functions._

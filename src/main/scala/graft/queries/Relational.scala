@@ -45,8 +45,7 @@ object Relational {
              |  count(*) AS count_order
              |FROM lineitem
              |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-             |GROUP BY l_returnflag, l_linestatus""".stripMargin),
-      headline = true),
+             |GROUP BY l_returnflag, l_linestatus""".stripMargin)),
 
     // ---- star join: fact shuffles, dims broadcast ----
     "q2_join_star" -> Q(
@@ -68,8 +67,7 @@ object Relational {
              |JOIN customer ON o_custkey = c_custkey
              |JOIN nation ON c_nationkey = n_nationkey
              |JOIN region ON n_regionkey = r_regionkey
-             |GROUP BY r_name, n_name""".stripMargin),
-      headline = true),
+             |GROUP BY r_name, n_name""".stripMargin)),
 
     // ---- top-k: TakeOrderedAndProject, never a full global sort ----
     "q3_topk" -> Q(
@@ -93,8 +91,7 @@ object Relational {
       Some("""SELECT user_id, event_id, rnk FROM (
              |  SELECT user_id, event_id,
              |    row_number() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) AS rnk
-             |  FROM events) WHERE rnk <= 3""".stripMargin),
-      headline = true),
+             |  FROM events) WHERE rnk <= 3""".stripMargin)),
 
     // ---- distinct aggregation ----
     "q5_distinct" -> Q(

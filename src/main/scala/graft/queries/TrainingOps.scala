@@ -2114,8 +2114,7 @@ object TrainingOps {
               |  GROUP BY 1, 2)
               |SELECT da, db, inter, sa.n_sh + sb.n_sh - inter AS un
               |FROM pairs p JOIN sizes sa ON p.da = sa.doc_id JOIN sizes sb ON p.db = sb.doc_id
-              |WHERE inter * 10 >= (sa.n_sh + sb.n_sh - inter) * 1""".stripMargin),
-      headline = true),
+              |WHERE inter * 10 >= (sa.n_sh + sb.n_sh - inter) * 1""".stripMargin)),
 
     // ---- asymmetric containment near-dup (Broder 1997): shared
     //      shingles cover ≥ half of the SMALLER doc's shingle set —
@@ -2154,8 +2153,7 @@ object TrainingOps {
               |  UNION ALL
               |  SELECT doc_id, '1-' || sg[5] || '-' || sg[6] || '-' || sg[7] || '-' || sg[8] AS band FROM sig)
               |SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-              |FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id""".stripMargin),
-      headline = true),
+              |FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id""".stripMargin)),
 
     // ---- the band-occupancy cap under the gate: buckets over the cap
     //      (2 here — binds at all SFs) star-pair to the bucket min
@@ -2623,8 +2621,7 @@ object TrainingOps {
              |ranked AS (SELECT qid, nid,
              |  row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rank
              |  FROM scored)
-             |SELECT qid, rank, nid FROM ranked WHERE rank <= 10""".stripMargin),
-      headline = true),
+             |SELECT qid, rank, nid FROM ranked WHERE rank <= 10""".stripMargin)),
 
     // ---- recall@10 of the IVF index against the brute-force ground
     //      truth — the evaluation every approximate index needs before

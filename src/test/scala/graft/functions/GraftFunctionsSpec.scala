@@ -107,7 +107,7 @@ class GraftFunctionsSpec extends SparkSpec {
     val rows = df.select(
       org.apache.spark.sql.functions.col("id"),
       TextFunctions.fingerprint(org.apache.spark.sql.functions.col("t")).as("k"),
-      TextFunctions.fingerprintExpr(org.apache.spark.sql.functions.col("t")).as("e")).collect()
+      FingerprintExpr(org.apache.spark.sql.functions.col("t")).as("e")).collect()
     rows.foreach { r =>
       assert(r.isNullAt(1) == r.isNullAt(2), s"null mismatch at id ${r.getLong(0)}")
       if (!r.isNullAt(1))
@@ -116,7 +116,7 @@ class GraftFunctionsSpec extends SparkSpec {
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     val d = docs.select(
       TextFunctions.fingerprint(org.apache.spark.sql.functions.col("text")).as("k"),
-      TextFunctions.fingerprintExpr(org.apache.spark.sql.functions.col("text")).as("e"))
+      FingerprintExpr(org.apache.spark.sql.functions.col("text")).as("e"))
       .where(org.apache.spark.sql.functions.col("k") =!= org.apache.spark.sql.functions.col("e")).count()
     assert(d == 0L, s"$d corpus rows diverge")
   }

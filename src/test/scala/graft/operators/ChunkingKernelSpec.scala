@@ -14,7 +14,7 @@ class ChunkingKernelSpec extends SparkSpec {
     val cols = Seq("doc_id", "chunk_idx", "chunk_text", "n_words", "chunk_fp")
     val k = Chunking.cdcChunks(df, "doc_id", "text", avgWords)
       .select(cols.head, cols.tail: _*).collect().map(_.toSeq).sortBy(_.toString)
-    val e = Chunking.cdcChunksExpr(df, "doc_id", "text", avgWords)
+    val e = CdcChunksExpr(df, "doc_id", "text", avgWords)
       .select(cols.head, cols.tail: _*).collect().map(_.toSeq).sortBy(_.toString)
     assert(k.length == e.length, s"$what: ${k.length} kernel rows vs ${e.length} expr rows")
     k.zip(e).foreach { case (a, b) => assert(a == b, s"$what: $a != $b") }
