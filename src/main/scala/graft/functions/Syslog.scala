@@ -1,11 +1,13 @@
 package graft.functions
 
 import java.nio.charset.StandardCharsets
+import java.time.ZoneId
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, TimeZoneAwareExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
@@ -34,6 +36,12 @@ import graft.pipeline.{FailSpec, Stage}
   * which an ASCII line needs no decode for. `SyslogSpec` checks the
   * scanner against the pattern (`SyslogRegex` in the tests) on edge
   * cases and a seeded fuzz, with codegen on and off.
+  *
+  * A line that matches the grammar but whose time token does not cast
+  * to a timestamp (`<13>Oct 11 host: msg`, time `Oct`) is unparseable
+  * too: [[SyslogParsesK]] routes it to the error handler in the same
+  * scan, instead of letting the cast fail the whole batch under ANSI
+  * mode.
   */
 object Syslog {
 
@@ -45,6 +53,10 @@ object Syslog {
   /** true when the string matches the grammar; null for a null input. */
   def isSyslog(raw: Column): Column = toColumn(SyslogValidK(toExpression(raw)))
 
+  /** true when the string matches the grammar AND its time token casts
+    * to a timestamp (the stage's routing test); null for a null input. */
+  def parses(raw: Column): Column = toColumn(SyslogParsesK(toExpression(raw)))
+
   /** the six capture groups as a struct of strings (`pid` is "" when the
     * tag has no `[pid]`); null when the line does not match. */
   def groups(raw: Column): Column = toColumn(SyslogScanK(toExpression(raw)))
@@ -52,7 +64,7 @@ object Syslog {
   /** Parse a raw syslog string into the typed struct. The struct is null
     * when the line does not match the grammar (the stage never projects
     * such rows: its failWhen dead-letters them first). The timestamp is
-    * Spark's `to_timestamp` of the captured token.
+    * the captured token cast to a timestamp, the cast [[parses]] checks.
     */
   def parse(raw: Column): Column = {
     val g = groups(raw)
@@ -63,7 +75,7 @@ object Syslog {
       pri.as("pri"),
       (pri / 8).cast("int").as("facility"),
       pmod(pri, lit(8)).cast("int").as("severity"),
-      to_timestamp(g("time")).as("time"),
+      g("time").cast(TimestampType).as("time"),
       g("host").as("host"),
       g("program").as("program"),
       g("pid").as("pid"),
@@ -72,13 +84,14 @@ object Syslog {
   }
 
   /** The syslogparser node: bytes payload → syslog struct payload,
-    * non-matching lines dead-lettered.
+    * unparseable lines (no grammar match, or a time token that does not
+    * cast) dead-lettered.
     */
   def stage: Stage = {
     val raw = col("payload").cast("string")
     Stage(
       failWhen = Some(FailSpec(
-        cond = !isSyslog(raw),
+        cond = !parses(raw),
         code = lit("ERR_PARSE"),
         msg = lit("failed to parse syslog msg"))),
       project = df => df.select(parse(raw).as("payload"), col("created"), col("recovery")))
@@ -171,6 +184,19 @@ object Syslog {
   def isSyslogEval(s: UTF8String): Boolean =
     scan(s.getBaseObject, s.getBaseOffset, s.numBytes, null)
 
+  /** eval for [[SyslogParsesK]]: the grammar test, then the cast's own
+    * parse of the time token, sliced from the raw bytes in place. Every
+    * character a timestamp accepts is ASCII, so a token with a non-ASCII
+    * byte fails the cast both raw and as the decoded group `parse`
+    * casts: the raw slice decides as the group would. */
+  def parsesEval(s: UTF8String, zone: ZoneId): Boolean = {
+    val cut = new Array[Int](12)
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    scan(base, off, s.numBytes, cut) &&
+      DateTimeUtils.stringToTimestamp(UTF8String.fromAddress(base, off + cut(2), cut(3) - cut(2)), zone).isDefined
+  }
+
   /** eval for [[SyslogScanK]]: the six groups, or null when the line
     * does not match. A line with any non-ASCII byte is first
     * re-encoded from its decoded form, so invalid UTF-8 reaches the
@@ -212,6 +238,22 @@ case class SyslogValidK(child: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"graft.functions.Syslog.isSyslogEval($c)")
   override protected def withNewChildInternal(newChild: Expression): SyslogValidK = copy(child = newChild)
   override def prettyName: String = "graft_is_syslog"
+}
+
+/** [[SyslogValidK]] plus the time token's cast, in the session time
+  * zone the cast in `Syslog.parse` uses. */
+case class SyslogParsesK(child: Expression, timeZoneId: Option[String] = None)
+    extends UnaryExpression with TimeZoneAwareExpression {
+  override def dataType: DataType = BooleanType
+  override def withTimeZone(id: String): TimeZoneAwareExpression = copy(timeZoneId = Option(id))
+  @transient private lazy val zone = zoneId
+  override def nullSafeEval(input: Any): Any = Syslog.parsesEval(input.asInstanceOf[UTF8String], zone)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val z = ctx.addReferenceObj("zoneId", zone, classOf[ZoneId].getName)
+    defineCodeGen(ctx, ev, c => s"graft.functions.Syslog.parsesEval($c, $z)")
+  }
+  override protected def withNewChildInternal(newChild: Expression): SyslogParsesK = copy(child = newChild)
+  override def prettyName: String = "graft_syslog_parses"
 }
 
 case class SyslogScanK(child: Expression) extends UnaryExpression {

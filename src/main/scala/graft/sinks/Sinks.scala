@@ -3,8 +3,10 @@ package graft.sinks
 import org.apache.spark.sql.DataFrame
 
 /** Batch-or-micro-batch write target. Streaming execution calls
-  * `writeBatch(df, batchId)` once per micro-batch from inside
-  * foreachBatch; batch execution calls `writeBatch(df)` once. Sinks
+  * `writeBatch(df, batchId)` once per micro-batch, on a thread of that
+  * batch, while the batch's other sink instances write concurrently
+  * (one instance's writes never overlap; see StreamingPipeline); batch
+  * execution calls `writeBatch(df)` once. Sinks
   * that need exactly-once semantics override the two-arg form and key
   * idempotence on the batch id (foreachBatch re-delivers a batch after
   * a failed epoch — at-least-once unless the sink dedupes).
@@ -35,22 +37,6 @@ final class IdempotentParquetSink(path: String) extends Sink {
     if (new java.io.File(dir, "_SUCCESS").exists()) return // already committed
     df.write.mode("overwrite").parquet(dir.toString)
   }
-}
-
-/** Kafka sink options for a ProduceRequest-shaped frame
-  * (`topic`,`value`) — per-row topic override is native
-  * (`kafkaproducer.go:99-106`). Producer tuning mirrors the reference's
-  * librdkafka settings (`kafkaproducer.go:63-73`).
-  */
-object KafkaSinkConfig {
-  def options(brokers: String): Map[String, String] = Map(
-    "kafka.bootstrap.servers" -> brokers,
-    "kafka.compression.type" -> "snappy",
-    "kafka.linger.ms" -> "3000",
-    "kafka.batch.size" -> "262144")
-
-  def write(df: DataFrame, brokers: String): Unit =
-    options(brokers).foldLeft(df.write.format("kafka"))((w, kv) => w.option(kv._1, kv._2)).save()
 }
 
 /** Driver-side collecting sink for tests (small data only). */

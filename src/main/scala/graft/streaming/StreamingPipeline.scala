@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -16,6 +18,23 @@ import graft.sinks.Sink
   * batch is persisted ONCE, so success/filtered/error splits never
   * re-read the source, and all sinks observe a consistent batch.
   *
+  * A micro-batch's writes run concurrently, as the reference runs
+  * every node in its own goroutines (`executor/executor.go:319-337`):
+  * each distinct `Sink` instance gets one daemon thread, created by the
+  * batch and ended before it returns, so the sinks' Spark jobs share
+  * the task slots instead of queueing one job at a time. Writes to one
+  * instance (registered under several keys) run in order on its
+  * thread. Two distinct sinks of one run must therefore not write to
+  * the same location. Each write's jobs carry the description
+  * `graft sink <key> batch <batchId>` (the key is the leaf id, or
+  * `<node>.deadletters` for a dead-letter sink) and, inherited from the
+  * stream's thread, the query's job group, which `stop()` cancels. The
+  * batch waits for every write it started, then rethrows the first
+  * failure with the others suppressed; writes that committed before
+  * another failed are replayed with the whole batch on restart, as a
+  * prefix of sequential writes would be, which is why every bundled
+  * sink is idempotent per (sink, batchId).
+  *
   * Reference semantics carried over (`executor/executor.go:142-207`):
   * source→roots broadcast and parent→children replication happen by
   * DataFrame reuse; `buffersize` maps to maxOffsetsPerTrigger on the
@@ -27,16 +46,24 @@ object StreamingPipeline {
   final case class Running(query: StreamingQuery) {
     /** stop the stream — the analog of cascade-close draining
       * (`executor.go:368-395`), with Spark's semantics: `stop()`
-      * interrupts the execution thread, so an in-flight micro-batch is
-      * CANCELLED rather than drained, and not checkpointed — it re-runs
-      * whole on restart. That is exactly why every bundled sink is
-      * idempotent per (sink, batchId) (`IdempotentParquetSink`,
-      * EsBulkSink doc-id upserts): replay-safe sinks make cancel+rerun
-      * equivalent to a drain. Non-idempotent custom sinks should
-      * drain explicitly (await a quiet trigger) before calling this. */
+      * cancels the query's job group and interrupts the execution
+      * thread, so an in-flight micro-batch is CANCELLED rather than
+      * drained, and not checkpointed — it re-runs whole on restart.
+      * The batch interrupts its write threads in turn and waits for
+      * them, so when this returns no write of the stream is running
+      * and no sink is written to any more; writes that had already
+      * committed are replayed with the batch. That is exactly why
+      * every bundled sink is idempotent per (sink, batchId)
+      * (`IdempotentParquetSink`, EsBulkSink doc-id upserts):
+      * replay-safe sinks make cancel+rerun equivalent to a drain.
+      * Non-idempotent custom sinks should drain explicitly (await a
+      * quiet trigger) before calling this. */
     def shutdown(): Unit = query.stop()
     def awaitTermination(): Unit = query.awaitTermination()
   }
+
+  /** One write of a micro-batch: `key` labels its Spark jobs. */
+  private final case class Write(key: String, sink: Sink, df: DataFrame)
 
   def run(
       source: DataFrame,
@@ -60,20 +87,20 @@ object StreamingPipeline {
         // leaks a persisted frame and a restart-supervised stream
         // bleeds storage memory failure after failure. The inner
         // finally unpersists the per-node MEMORY_AND_DISK caches
-        // Pipeline.buildOn created.
+        // Pipeline.buildOn created, after every write has ended.
         try {
           val built = Pipeline.buildOn(cached, config.nodes, registry,
             observeMetrics = observeMetrics, persistShared = true)
           try {
-            built.leaves.foreach { case (id, df) =>
-              sinks.get(id).foreach(_.writeBatch(df, batchId))
+            val leafWrites = built.leaves.flatMap { case (id, df) =>
+              sinks.get(id).map(Write(id, _, df))
             }
-            walk(built.roots).foreach { node =>
-              for {
-                dead <- node.deadLetters
-                sink <- deadLetterSinks.get(node.conf.id)
-              } sink.writeBatch(dead, batchId)
-            }
+            val deadWrites = for {
+              node <- walk(built.roots)
+              dead <- node.deadLetters
+              sink <- deadLetterSinks.get(node.conf.id)
+            } yield Write(s"${node.conf.id}.deadletters", sink, dead)
+            writeAll(leafWrites ++ deadWrites, batchId, queryName)
           } finally { built.unpersistAll(); () }
         } finally { cached.unpersist(); () }
       }
@@ -81,6 +108,51 @@ object StreamingPipeline {
     val withCp = checkpoint.fold(writer)(cp => writer.option("checkpointLocation", cp))
     Running(withCp.start())
   }
+
+  /** Run a micro-batch's writes, one thread per distinct sink instance,
+    * and return once every one of them has ended. Called on the
+    * stream's thread: each new thread starts with a clone of its Spark
+    * local properties (job group, SQL execution id), so a per-batch
+    * thread never carries a stale group into a later batch or
+    * restart, as a long-lived pool would. When `stop()` interrupts
+    * the wait, the write threads are interrupted too, and still waited
+    * for. */
+  private def writeAll(writes: List[Write], batchId: Long, queryName: String): Unit = {
+    val failures = new ConcurrentLinkedQueue[Throwable]()
+    val instances = writes.foldLeft(List.empty[Sink]) { (seen, w) =>
+      if (seen.exists(_ eq w.sink)) seen else w.sink :: seen
+    }.reverse
+    val threads = instances.map { sink =>
+      val own = writes.filter(_.sink eq sink)
+      val t = new Thread(() =>
+        try own.foreach { w =>
+          w.df.sparkSession.sparkContext.setJobDescription(s"graft sink ${w.key} batch $batchId")
+          w.sink.writeBatch(w.df, batchId)
+        } catch { case e: Throwable => failures.add(e); () },
+        s"graft-sink-$queryName-$batchId-${own.map(_.key).mkString("+")}")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    try threads.foreach(_.join())
+    catch {
+      case stop: InterruptedException =>
+        threads.foreach(_.interrupt())
+        threads.foreach(joinUninterruptibly)
+        failures.forEach(e => if (e ne stop) stop.addSuppressed(e))
+        throw stop
+    }
+    Option(failures.poll()).foreach { first =>
+      failures.forEach(e => if (e ne first) first.addSuppressed(e))
+      throw first
+    }
+  }
+
+  private def joinUninterruptibly(t: Thread): Unit =
+    while (t.isAlive) {
+      try t.join()
+      catch { case _: InterruptedException => () }
+    }
 
   private def walk(nodes: List[Pipeline.BuiltNode]): List[Pipeline.BuiltNode] =
     nodes.flatMap(n => n :: walk(n.children))

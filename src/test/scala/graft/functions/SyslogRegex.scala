@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampType
 
 import graft.pipeline.{FailSpec, Stage}
 
@@ -16,6 +17,12 @@ object SyslogRegex {
 
   def isSyslog(raw: Column): Column = raw.rlike(Pattern)
 
+  /** [[isSyslog]], and the time group casts to a timestamp: the
+    * stage's routing test, with `try_cast` in place of the kernel's
+    * call into the cast's parser; null for a null input */
+  def parses(raw: Column): Column =
+    when(raw.isNotNull, isSyslog(raw) && regexp_extract(raw, Pattern, 2).try_cast(TimestampType).isNotNull)
+
   /** the six groups as a struct of strings, null when the line does not match */
   def groups(raw: Column): Column =
     when(isSyslog(raw), struct(Syslog.GroupNames.zipWithIndex.map { case (name, i) =>
@@ -26,6 +33,6 @@ object SyslogRegex {
   def stage: Stage = {
     val kernel = Syslog.stage
     kernel.copy(failWhen = kernel.failWhen.map(f =>
-      f.copy(cond = !isSyslog(col("payload").cast("string")))))
+      f.copy(cond = !parses(col("payload").cast("string")))))
   }
 }

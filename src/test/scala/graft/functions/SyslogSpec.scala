@@ -147,6 +147,36 @@ class SyslogSpec extends SparkSpec {
     }
   }
 
+  test("time-token check == try_cast of the regex's time group, and the stage dead-letters a bad time") {
+    val cases: Seq[Array[Byte]] = Seq(
+      "<13>Oct 11 host: msg", "<13>2024-01-01T00:00:00Z h p: a", "<13>2024-01-01 h p: a",
+      "<13>2024-13-01T00:00:00Z h p: a", "<13>2024-02-30 h p: a", "<13>2024-01-01T25:00:00Z h p: a",
+      "<13>2021-01-02T15:04:05.123456-07:00 h p[1]: a", "<13>2024-01-01T00:00:00+25:00 h p: a",
+      "<13>2024-01-01T00:00:00Europe/Berlin h p: a", "<13>2024-01-01T00:00:00Mars/Base h p: a",
+      "<13>2024-01-01T00:00:00Z\u00e9 h p: a", "<13>\u00e92024-01-01 h p: a", "<13>2024-01-01\u00a0 h p: a",
+      "<13>2024 h p: a", "<13>99999999-01-01 h p: a", "<13>t h p: a", "not a syslog line"
+    ).map(bytes) ++ Seq(
+      "3c31333e323032342d30312d3031ff206820703a2061",  // <13>2024-01-01\xFF h p: a
+      "3c31333e323032342d30312d30312068ff20703a2061"   // a valid time, invalid UTF-8 in the host
+    ).map(hex) :+ null
+    val raw = col("payload").cast("string")
+    for ((mode, conf) <- CodegenModes) withConf(conf: _*) {
+      val env = envelope(cases)
+      val both = env.select(col("payload"), Syslog.parses(raw).as("kp"), SyslogRegex.parses(raw).as("rp"))
+      val bad = both.filter(!(col("kp") <=> col("rp")))
+      assert(bad.count() == 0, s"$mode: " + bad.collect().mkString("\n"))
+      val parsing = both.filter(col("kp")).collect().map(r => new String(r.getAs[Array[Byte]]("payload"), UTF_8)).toSet
+      assert(parsing.contains("<13>2024-01-01 h p: a") && !parsing.contains("<13>Oct 11 host: msg"), s"$mode: $parsing")
+      withConf("spark.sql.ansi.enabled" -> "true") {
+        val split = ErrorRouting(env, Syslog.stage)
+        assert(split.output.select(col("payload.time")).collect().length == parsing.size, mode)
+        val dead = split.deadLetters.get.select(col("payload.event"), col("payload.error.code")).collect()
+        assert(dead.length == cases.length - parsing.size, mode)
+        assert(dead.map(_.getString(0)).contains("<13>Oct 11 host: msg") && dead.forall(_.getString(1) == "ERR_PARSE"), mode)
+      }
+    }
+  }
+
   /** `n` seeded lines: well-formed bases, each mutated by insertions of
     * grammar delimiters, whitespace, line terminators, digits and
     * non-ASCII characters, deletions, truncation and appended
@@ -198,15 +228,25 @@ class SyslogSpec extends SparkSpec {
         assert(valid > 30000 && valid < 90000, s"$mode: $valid of 120000 lines match")
         assert(both.filter(col("kv") && col("kg").cast("string").contains("\uFFFD")).count() > 100, mode)
 
+        // the stage also dead-letters matching lines whose time token
+        // does not cast (the `<13>Oct 11 ...` base): kernel vs try_cast
+        val raw = col("payload").cast("string")
+        val routed = env.select(Syslog.parses(raw).as("kp"), SyslogRegex.parses(raw).as("rp"))
+        assert(routed.filter(!(col("kp") <=> col("rp"))).count() == 0, mode)
+        val parsed = routed.filter(col("kp")).count()
+        assert(parsed > 10000 && valid - parsed > 10000, s"$mode: $parsed of $valid matching lines parse")
+
         val kernel = ErrorRouting(env, Syslog.stage)
         val regex = ErrorRouting(env, SyslogRegex.stage)
         def deadHash(split: ErrorRouting.Split) = split.deadLetters.get
           .agg(sum(pmod(xxhash64(col("payload.event")), lit(1000000007L)))).head().getLong(0)
-        assert(kernel.output.count() == valid, mode)
-        assert(regex.output.count() == valid, mode)
-        assert(kernel.deadLetters.get.count() == 120000 - valid, mode)
-        assert(regex.deadLetters.get.count() == 120000 - valid, mode)
+        assert(kernel.output.count() == parsed, mode)
+        assert(regex.output.count() == parsed, mode)
+        assert(kernel.deadLetters.get.count() == 120000 - parsed, mode)
+        assert(regex.deadLetters.get.count() == 120000 - parsed, mode)
         assert(deadHash(kernel) == deadHash(regex), mode)
+        // every routed line parses under ANSI casts: no row of the output throws
+        assert(kernel.output.filter(col("payload.time").isNull).count() == 0, mode)
       }
     } finally { env.unpersist(); () }
   }

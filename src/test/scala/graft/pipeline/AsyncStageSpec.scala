@@ -5,9 +5,13 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.concurrent.ExecutionContext
 
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
+import graft.sinks.CollectingSink
+import graft.streaming.StreamingPipeline
 
 /** The per-row AsyncNode (node/node.go:36-39, docs/async-nodes.md):
   * bounded in-flight concurrency, input-order results regardless of
@@ -119,7 +123,7 @@ class AsyncStageSpec extends SparkSpec {
     val calls = spark.sparkContext.longAccumulator("rpc_calls")
     val stage = AsyncStage.stage(
       p => {
-        calls.add(1L)
+        calls.synchronized(calls.add(1L)) // in-flight calls share the task's copy
         if (p.startsWith("error")) AsyncStage.Errored("ERR_ASYNC", p)
         else AsyncStage.Returned(p.toUpperCase)
       },
@@ -132,6 +136,89 @@ class AsyncStageSpec extends SparkSpec {
     assert(split.output.count() == 16)
     assert(split.deadLetters.get.count() == 4)
     assert(calls.value == 20L, s"RPC fired ${calls.value} times for 20 rows")
+  }
+
+  test("the RPC fires exactly once per row per micro-batch while a stream writes both branches concurrently") {
+    // the kit tree of the streaming benchmark: the async node's success
+    // leaf, its error handler's leaf and its raw dead letters are three
+    // concurrent writes, all reading the node's lazy localCheckpoint
+    val calls = spark.sparkContext.longAccumulator("rpc_calls_stream")
+    val reg = Registry.builtins()
+    reg.registerNodeType("countingrpcnode", new StageFactory {
+      val consumes = Registry.StringT
+      val produces = Registry.StringT
+      def build(params: Map[String, String]): Stage = {
+        val counter = calls // the task closure captures the accumulator, not this factory
+        AsyncStage.stage(
+        p => {
+          // calls run on the stage's pool: a task's accumulator copy is
+          // shared by its in-flight calls, and LongAccumulator.add is not atomic
+          counter.synchronized(counter.add(1L))
+          Thread.sleep(1)
+          if (p.startsWith("rpcfail")) AsyncStage.Errored("ERR_ASYNC", p)
+          else if (p.startsWith("skip")) AsyncStage.Filtered
+          else AsyncStage.Returned(p.toUpperCase)
+        },
+        maxInFlight = 4)
+      }
+    })
+    val cfg = graft.config.AppConfig.parse(
+      """application: rpcstream
+        |source:
+        |  name: stringsource
+        |  params: {path: unused}
+        |nodes:
+        |  - name: filternode
+        |    children:
+        |      - name: errornode
+        |        error_handler:
+        |          name: errorkafkaproducer
+        |          params: {topic: kit-errors}
+        |        children:
+        |          - name: countingrpcnode
+        |            error_handler:
+        |              name: errorkafkaproducer
+        |              params: {topic: rpc-errors}
+        |            children:
+        |              - name: fanoutnode
+        |                params: {copies: "3"}
+        |                children:
+        |                  - name: stringtoproducerequestnode
+        |                    params: {topic: kit-out}
+        |                    children:
+        |                      - name: kafkaproducer
+        |                        id: kitproducer
+        |""".stripMargin, reg).fold(e => fail(s"config rejected: $e"), identity)
+    // per 20 events: 2 filtered, 3 errored, 3 RPC failures, 1 RPC skip, 11 ok;
+    // the 15 that pass filternode and errornode reach the RPC
+    def payload(i: Int): String = (i % 20 match {
+      case 0 | 1 => "filterme"
+      case 2 | 3 | 4 => "error"
+      case 5 | 6 | 7 => "rpcfail"
+      case 8 => "skip"
+      case _ => "ok"
+    }) + s"-$i"
+    val s = spark
+    import s.implicits._
+    val input = MemoryStream[String](s, 4)
+    val source = input.toDF().select(col("value").as("payload"),
+      lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("created"), lit(false).as("recovery"))
+    val sinks = Seq("kitproducer", "errornode.errors", "countingrpcnode.errors").map(_ -> new CollectingSink).toMap
+    val dead = new CollectingSink
+    val running = StreamingPipeline.run(source, cfg, reg, sinks = sinks,
+      deadLetterSinks = Map("countingrpcnode" -> dead), trigger = Trigger.ProcessingTime(0L),
+      queryName = "rpc-exactly-once")
+    try {
+      for (b <- 1 to 4) {
+        val before = calls.value
+        input.addData((0 until 200).map(i => payload(b * 1000 + i)))
+        running.query.processAllAvailable()
+        assert(calls.value - before == 150L, s"batch $b: RPC fired ${calls.value - before} times for 150 rows")
+        assert(sinks.map { case (id, sink) => id -> sink.rows.size } == Map(
+          "kitproducer" -> 330 * b, "errornode.errors" -> 30 * b, "countingrpcnode.errors" -> 30 * b))
+        assert(dead.rows.size == 30 * b)
+      }
+    } finally running.shutdown()
   }
 
   test("timeout_ms=0 (default) never times a call out") {

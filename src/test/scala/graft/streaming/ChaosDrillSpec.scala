@@ -1,8 +1,11 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable.ListBuffer
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -10,6 +13,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import graft.SparkSpec
+import graft.config.AppConfig
 import graft.pipeline.Registry
 import graft.sinks.{IdempotentParquetSink, Sink}
 
@@ -30,6 +34,11 @@ import graft.sinks.{IdempotentParquetSink, Sink}
   * (batch-id idempotent sink), drain the remaining input, run the
   * bounded recovery replay to completion, and ack it so a third
   * incarnation sees a clean control plane.
+  *
+  * Two more drills cover a micro-batch whose sinks write concurrently:
+  * one sink of three throws mid-batch, and the stream is stopped during
+  * a slow write. Neither may leave a write running past the batch, and
+  * a restart must replay every idempotent sink to exact contents.
   */
 class ChaosDrillSpec extends SparkSpec {
 
@@ -231,18 +240,20 @@ class ChaosDrillSpec extends SparkSpec {
       busC.start()
       assert(redelivered.isEmpty, "completed recovery must not replay to a fresh instance")
 
-      // metrics on B counted the redelivered and new batches. The async
+      // metrics on B counted the batches it computed. The async
       // node's `received` sits just below its exactly-once checkpoint
-      // (Pipeline.buildNode ordering) and counts every row the crashed
-      // batch re-delivered: w2 22 (25 minus 3 filtered upstream) +
-      // w3 13 + recovery 200 = 235. Counters ABOVE the checkpoint
+      // (Pipeline.buildNode ordering): w3 13 + recovery 200 = 213. The
+      // crashed batch's w2 rows are not among them: A wrote its results
+      // and its dead letters concurrently and waited for both before
+      // failing, so B's re-delivery finds both sinks committed, skips
+      // both writes and runs no job. Counters ABOVE the checkpoint
       // break (filternode's) are structurally unobservable for an
       // async subtree — the async node's own received IS the parent's
       // emitted (1:1 pre). Events arrive on async listener buses: wait.
       val deadline = System.currentTimeMillis() + 10000
-      while (metricsB.nodeCounts("asyncrpcnode")._1 < 235 && System.currentTimeMillis() < deadline)
+      while (metricsB.nodeCounts("asyncrpcnode")._1 < 213 && System.currentTimeMillis() < deadline)
         Thread.sleep(50)
-      assert(metricsB.nodeCounts("asyncrpcnode")._1 == 235,
+      assert(metricsB.nodeCounts("asyncrpcnode")._1 == 213,
         s"async received mismatch; snapshot=${metricsB.snapshot}")
       assert(metricsB.nodeCounts("resultsnode")._1 > 0)
     } finally {
@@ -250,5 +261,153 @@ class ChaosDrillSpec extends SparkSpec {
       metricsB.uninstall()
       electionB.shutdown()
     }
+  }
+
+  // ---- concurrent sink writes under failure and stop ----------------
+
+  private val TreeYaml =
+    """application: concurrent
+      |source:
+      |  name: stringsource
+      |  params: {path: unused}
+      |nodes:
+      |  - name: filternode
+      |    children:
+      |      - name: errornode
+      |        error_handler:
+      |          name: errorhandlernode
+      |        children:
+      |          - name: resultsnode
+      |""".stripMargin
+
+  private def mix(tag: String, n: Int): Seq[String] =
+    (1 to n).map { i =>
+      if (i % 10 == 0) s"error $tag-$i" else if (i % 7 == 0) s"filterme $tag-$i" else s"ok $tag-$i"
+    }
+
+  /** counts the writes in flight; `before` runs ahead of the inner write */
+  private final class Tracked(inner: Sink, inFlight: AtomicInteger, before: Long => Unit) extends Sink {
+    def writeBatch(df: DataFrame): Unit = writeBatch(df, 0L)
+    override def writeBatch(df: DataFrame, batchId: Long): Unit = {
+      inFlight.incrementAndGet()
+      try { before(batchId); inner.writeBatch(df, batchId) }
+      finally { inFlight.decrementAndGet(); () }
+    }
+  }
+
+  /** TreeYaml's three sinks: the success leaf, the error handler's leaf
+    * and the raw dead letters of errornode; `wrap` decorates each by key */
+  private def startTree(s: SparkSession, root: Path, name: String)(wrap: (String, Sink) => Sink) = {
+    val reg = Registry.builtins()
+    val cfg = AppConfig.parse(TreeYaml, reg).fold(e => fail(s"config rejected: $e"), identity)
+    def sink(key: String) = wrap(key, new IdempotentParquetSink(s"$root/$key"))
+    StreamingPipeline.run(fileSource(s, s"$root/in"), cfg, reg,
+      sinks = Map("resultsnode" -> sink("results"), "errornode.errors" -> sink("errors")),
+      deadLetterSinks = Map("errornode" -> sink("dlq")),
+      checkpoint = Some(s"$root/checkpoint"), queryName = name)
+  }
+
+  /** each sink holds exactly what `waves` imply, once */
+  private def assertExact(s: SparkSession, root: Path, waves: Seq[String]): Unit = {
+    import s.implicits._
+    val results = s.read.parquet(s"$root/results").select("payload").as[String].collect().sorted.toSeq
+    assert(results == waves.filter(_.startsWith("ok")).sorted, s"results: ${results.length} rows")
+    val errors = waves.filter(_.startsWith("error")).sorted
+    for (key <- Seq("errors", "dlq")) {
+      val got = s.read.parquet(s"$root/$key").select(col("payload.event")).as[String].collect().sorted.toSeq
+      assert(got == errors, s"$key: ${got.length} rows, expected ${errors.length}")
+    }
+  }
+
+  private def committed(root: Path, key: String, batchId: Long): Boolean =
+    Files.exists(root.resolve(s"$key/batch=$batchId/_SUCCESS"))
+
+  test("one of three sinks throws mid-batch: the batch waits for the others, a restart replays to exact counts") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("chaos-sink-throws")
+    val inFlight = new AtomicInteger()
+    val boom = new RuntimeException("injected failure in the errors sink")
+    val w1 = mix("w1", 40); val w2 = mix("w2", 30); val w3 = mix("w3", 20)
+    w1.toDF("v").write.mode("append").parquet(s"$root/in")
+    val run = startTree(s, root, "chaos-throw") { (key, inner) =>
+      new Tracked(inner, inFlight, b =>
+        if (b == 1 && key == "errors") throw boom
+        else if (b == 1 && key == "results") Thread.sleep(1500))
+    }
+    run.query.processAllAvailable()
+    w2.toDF("v").write.mode("append").parquet(s"$root/in")
+    val ex = intercept[StreamingQueryException] { run.query.processAllAvailable() }
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null).exists(_ eq boom),
+      s"the stream failed with another exception: $ex")
+    intercept[StreamingQueryException] { run.query.awaitTermination() }
+    // the batch returned only after its other writes ended: the slow one committed
+    assert(!run.query.isActive && inFlight.get == 0, s"${inFlight.get} writes still running")
+    assert(committed(root, "results", 1) && committed(root, "dlq", 1) && !committed(root, "errors", 1))
+
+    // the sink stops throwing; the failed batch replays whole
+    val again = startTree(s, root, "chaos-throw")((_, inner) => inner)
+    try {
+      again.query.processAllAvailable()
+      w3.toDF("v").write.mode("append").parquet(s"$root/in")
+      again.query.processAllAvailable()
+    } finally again.shutdown()
+    assertExact(s, root, w1 ++ w2 ++ w3)
+  }
+
+  test("shutdown during a slow write: no write outlives it, no sink changes after it, a restart replays exactly") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("chaos-stop")
+    val name = "chaos-stop"
+    val started = new CountDownLatch(1)
+    val marker = root.resolve("results/_interrupted-batch-1")
+    // the slow write blocks until interrupted, then takes a second to
+    // return, as a client call that finishes its request first would
+    val slow: Long => Unit = b => if (b == 1) {
+      started.countDown()
+      try Thread.sleep(60000) catch { case _: InterruptedException => () }
+      val until = System.nanoTime() + 1000000000L
+      while (System.nanoTime() < until) try Thread.sleep(50) catch { case _: InterruptedException => () }
+      Files.write(marker, Array.emptyByteArray)
+      throw new InterruptedException("slow write interrupted")
+    }
+    val w1 = mix("w1", 40); val w2 = mix("w2", 30); val w3 = mix("w3", 20)
+    w1.toDF("v").write.mode("append").parquet(s"$root/in")
+    val fastInFlight = new AtomicInteger()
+    val run = startTree(s, root, name) { (key, inner) =>
+      if (key == "results") new Tracked(inner, new AtomicInteger(), slow) else new Tracked(inner, fastInFlight, _ => ())
+    }
+    run.query.processAllAvailable()
+    w2.toDF("v").write.mode("append").parquet(s"$root/in")
+    assert(started.await(60, TimeUnit.SECONDS), "batch 1 never reached the slow write")
+    // stop once the two fast writes of batch 1 have returned
+    def fastDone = committed(root, "errors", 1) && committed(root, "dlq", 1) && fastInFlight.get == 0
+    val deadline = System.currentTimeMillis() + 60000
+    while (!fastDone && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    assert(fastDone, "the fast writes of batch 1 did not return")
+    run.shutdown()
+
+    val alive = Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith(s"graft-sink-$name-"))
+    assert(alive.isEmpty, s"batch threads outlived shutdown(): ${alive.map(_.getName)}")
+    assert(Files.exists(marker), "shutdown() returned before the slow write ended")
+    assert(run.query.exception.isEmpty, s"stop was not clean: ${run.query.exception}")
+    def listing: Map[String, (Long, Long)] = Seq("results", "errors", "dlq").flatMap { key =>
+      Files.walk(root.resolve(key)).iterator().asScala.filter(Files.isRegularFile(_)).map { f =>
+        f.toString -> ((Files.size(f), Files.getLastModifiedTime(f).toMillis))
+      }.toSeq
+    }.toMap
+    val atStop = listing
+    Thread.sleep(1500)
+    assert(listing == atStop, "a sink directory changed after shutdown() returned")
+    assert(!committed(root, "results", 1))
+
+    val again = startTree(s, root, name)((_, inner) => inner)
+    try {
+      again.query.processAllAvailable()
+      w3.toDF("v").write.mode("append").parquet(s"$root/in")
+      again.query.processAllAvailable()
+    } finally again.shutdown()
+    assertExact(s, root, w1 ++ w2 ++ w3)
   }
 }

@@ -1,7 +1,13 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -9,7 +15,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpec
 import graft.config.AppConfig
 import graft.pipeline.Registry
-import graft.sinks.CollectingSink
+import graft.sinks.{CollectingSink, Sink}
 
 /** End-to-end streaming run of the reference's deterministic 10/5/3
   * mix through the full config tree — the Structured Streaming analog
@@ -417,5 +423,125 @@ class StreamingPipelineSpec extends SparkSpec {
       running.shutdown()
       metrics.uninstall()
     }
+  }
+
+  test("each write's jobs carry its sink label and the query's job group; one instance writes on one thread") {
+    val s = spark
+    import s.implicits._
+    val reg = Registry.builtins()
+    val cfg = AppConfig.parse(
+      """application: labeltest
+        |source:
+        |  name: stringsource
+        |  params: {path: unused}
+        |nodes:
+        |  - name: filternode
+        |    children:
+        |      - name: errornode
+        |        error_handler:
+        |          name: errorhandlernode
+        |        children:
+        |          - name: resultsnode
+        |""".stripMargin, reg).fold(e => sys.error(e), identity)
+    val jobs = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val desc = Option(e.properties).map(_.getProperty("spark.job.description")).orNull
+        if (desc != null && desc.startsWith("graft sink "))
+          jobs.add(desc -> e.properties.getProperty("spark.jobGroup.id"))
+      }
+    }
+    /** records the threads it ran on and how many of its writes overlapped */
+    final class ThreadProbe extends Sink {
+      val inner = new CollectingSink
+      val threads = new ConcurrentLinkedQueue[String]()
+      val active = new AtomicInteger()
+      @volatile var overlapped = false
+      def writeBatch(df: DataFrame): Unit = {
+        if (active.incrementAndGet() > 1) overlapped = true
+        threads.add(Thread.currentThread.getName)
+        try { Thread.sleep(50); inner.writeBatch(df) } finally { active.decrementAndGet(); () }
+      }
+    }
+    val shared = new ThreadProbe // one instance under two keys
+    val errors = new ThreadProbe
+    val input = MemoryStream[String](s)
+    val source = input.toDF().select(col("value").as("payload"),
+      lit(Timestamp.valueOf("2024-01-01 00:00:00")).as("created"), lit(false).as("recovery"))
+    s.sparkContext.addSparkListener(listener)
+    val running = StreamingPipeline.run(source, cfg, reg,
+      sinks = Map("resultsnode" -> shared, "errornode.errors" -> errors),
+      deadLetterSinks = Map("errornode" -> shared),
+      trigger = Trigger.ProcessingTime(0L), queryName = "labeltest")
+    try {
+      for (b <- 0 until 3) {
+        input.addData(Seq(s"ok $b", s"error $b", s"filterme $b"))
+        running.query.processAllAvailable()
+      }
+      val keys = Seq("resultsnode", "errornode.errors", "errornode.deadletters")
+      val want = for (b <- 0 until 3; k <- keys) yield s"graft sink $k batch $b"
+      val deadline = System.currentTimeMillis() + 10000
+      while (!want.forall(w => jobs.asScala.exists(_._1 == w)) && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      val seen = jobs.asScala.toSeq
+      assert(want.forall(w => seen.exists(_._1 == w)), s"unlabelled writes; labelled jobs: $seen")
+      // the group `stop()` cancels by: inherited from the stream's thread
+      val runId = running.query.runId.toString
+      assert(seen.forall(_._2 == runId), s"a write's job left the query's group $runId: $seen")
+
+      assert(shared.inner.rows.size == 6 && errors.inner.rows.size == 3)
+      assert(!shared.overlapped, "two writes to one sink instance overlapped")
+      val sharedThreads = shared.threads.asScala.toSeq
+      val errorThreads = errors.threads.asScala.toSeq
+      assert(sharedThreads.length == 6 && sharedThreads.distinct.length == 3, sharedThreads)
+      assert(sharedThreads.forall(_.startsWith("graft-sink-labeltest-")), sharedThreads)
+      assert(sharedThreads.toSet.intersect(errorThreads.toSet).isEmpty, "distinct instances shared a thread")
+    } finally {
+      running.shutdown()
+      s.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("a syslog line whose time token does not parse is dead-lettered; the stream commits") {
+    val s = spark
+    import s.implicits._
+    val reg = Registry.builtins()
+    val cfg = AppConfig.parse(
+      """application: syslogstream
+        |source:
+        |  name: parquetsource
+        |  params: {path: unused}
+        |nodes:
+        |  - name: syslogparser
+        |    error_handler:
+        |      name: errorkafkaproducer
+        |      params: {topic: syslog-errors}
+        |    children:
+        |      - name: jsonbuilder
+        |        params: {topic: logs-json}
+        |        children:
+        |          - name: kafkaproducer
+        |      - name: docbuilder
+        |        params: {index: logs}
+        |        children:
+        |          - name: elasticsearch
+        |""".stripMargin, reg).fold(e => sys.error(e), identity)
+    val input = MemoryStream[String](s)
+    val source = input.toDF().select(col("value").cast("binary").as("payload"),
+      lit(Timestamp.valueOf("2024-01-01 00:00:00")).as("created"), lit(false).as("recovery"))
+    val sinks = Seq("kafkaproducer", "elasticsearch", "syslogparser.errors").map(_ -> new CollectingSink).toMap
+    val dead = new CollectingSink
+    val running = StreamingPipeline.run(source, cfg, reg, sinks = sinks,
+      deadLetterSinks = Map("syslogparser" -> dead), trigger = Trigger.ProcessingTime(0L))
+    val bad = "<13>Oct 11 host: msg"
+    try {
+      input.addData((1 to 5).map(i => s"<13>2024-01-01T00:00:0${i}Z host$i app[$i]: msg $i") :+ bad)
+      running.query.processAllAvailable()
+      assert(running.query.exception.isEmpty)
+      assert(sinks.map { case (id, sink) => id -> sink.rows.size } ==
+        Map("kafkaproducer" -> 5, "elasticsearch" -> 5, "syslogparser.errors" -> 1))
+      assert(dead.rows.map(r => (r.getStruct(0).getString(1), r.getStruct(0).getStruct(2).getString(0))) ==
+        Seq(bad -> "ERR_PARSE"))
+    } finally running.shutdown()
   }
 }
