@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-import graft.config.{AppConfig, NodeConf}
+import graft.config.AppConfig
 import graft.pipeline.{Pipeline, Registry}
 import graft.sinks.IdempotentParquetSink
 import graft.streaming.{FileMessageBus, GraftApp, KafkaSourceConfig, MessageBus, MetricsServer, PipelineMetrics}
@@ -71,15 +71,6 @@ object GraftMain {
       case _ => new FileMessageBus(Paths.get(s"$outDir/_control.jsonl"))
     }
 
-  /** sink keys mirroring Pipeline.Built.leaves: leaf node ids plus
-    * `<id>.errors` for error-handler output streams (invariant pinned
-    * in GraftMainSpec against an actual Pipeline.build). */
-  private[graft] def leafIds(nodes: List[NodeConf]): List[String] =
-    nodes.filterNot(_.disabled).flatMap { n =>
-      val own = if (n.children.forall(_.disabled)) List(n.id) else leafIds(n.children)
-      own ++ n.errorHandler.map(_ => n.id + ".errors").toList
-    }
-
   private def execute(spark: SparkSession, app: GraftApp, outDir: String,
                       streamMode: Boolean): Either[String, String] = {
     val config = app.config
@@ -95,7 +86,7 @@ object GraftMain {
         val source = KafkaSourceConfig.stream(spark, config.source.params)
         // exactly-once landing: batch-id-keyed commit dirs, so an epoch
         // retry after a sink failure never duplicates records
-        val sinks = leafIds(config.nodes)
+        val sinks = Pipeline.leafKeys(config.nodes, app.registry)
           .map(id => id -> new IdempotentParquetSink(s"$outDir/$id")).toMap
         val running = app.execute(source, sinks,
           checkpoint = Some(s"$outDir/_checkpoint"))

@@ -53,10 +53,13 @@ object StreamingDemo {
         }).as("created"),
         lit(false).as("recovery"))
 
+    // dead letters leave errornode through its error_handler, whose
+    // output is the `errornode.errors` leaf
     val running = StreamingPipeline.run(
       source, cfg, reg,
-      sinks = Map("resultsnode" -> new ParquetSink(s"$outDir/results")),
-      deadLetterSinks = Map("errornode" -> new ParquetSink(s"$outDir/dead-letters")),
+      sinks = Map(
+        "resultsnode" -> new ParquetSink(s"$outDir/results"),
+        "errornode.errors" -> new ParquetSink(s"$outDir/dead-letters")),
       checkpoint = Some(s"$outDir/checkpoint"))
     running.query.processAllAvailable()
     running.shutdown()

@@ -38,7 +38,6 @@ object Kernels {
     */
   def byteFoldHash(bin: Column): Column = toColumn(ByteFoldHashK(toExpression(bin)))
   def utf8Invalid(bin: Column): Column = toColumn(Utf8InvalidK(toExpression(bin)))
-  def percentNorm(url: Column): Column = toColumn(PercentNormK(toExpression(url)))
   def canonUrl(url: Column): Column = toColumn(CanonUrlK(toExpression(url)))
   def surtKey(url: Column): Column = toColumn(SurtKeyK(toExpression(url)))
   def highBytes(bin: Column): Column = toColumn(HighBytesK(toExpression(bin)))
@@ -607,8 +606,7 @@ object Kernels {
         c == '+' || c == '.' || c == '-'
     while (i < n && schemeChar(t.charAt(i))) i += 1
     if (!t.startsWith("://", i)) return UTF8String.fromString(t)
-    // percent-normalize the WHOLE url before any splitting (the
-    // Column chain applies percentNorm to the trimmed input)
+    // percent-normalize the WHOLE url before any splitting
     val s = percentNormEval(UTF8String.fromString(t)).toString
     val scheme = s.substring(0, i).toLowerCase(java.util.Locale.ROOT)
     // rest = after "://", fragment dropped
@@ -952,16 +950,6 @@ case class SurtKeyK(child: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.surtKeyEval($c)")
   override protected def withNewChildInternal(newChild: Expression): SurtKeyK = copy(child = newChild)
   override def prettyName: String = "graft_surt_key"
-}
-
-case class PercentNormK(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    Kernels.percentNormEval(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.percentNormEval($c)")
-  override protected def withNewChildInternal(newChild: Expression): PercentNormK = copy(child = newChild)
-  override def prettyName: String = "graft_percent_norm"
 }
 
 case class HighBytesK(child: Expression) extends UnaryExpression {

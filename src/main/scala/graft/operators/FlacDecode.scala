@@ -96,7 +96,6 @@ object FlacDecode {
       while (bits(1) == 0) { q += 1; need(q <= (b.length.toLong * 8)) }
       q
     }
-    def eof: Boolean = nBits == 0 && pos >= b.length
   }
 
   // ---- CRCs (frame-header CRC-8 poly 0x07; frame CRC-16 poly 0x8005) --

@@ -26,8 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  val MetaSchema = "kind STRING, n_bytes BIGINT, width BIGINT, height BIGINT, duration_ms BIGINT"
-
   /** media kind from a source tag: stable 3-way split. */
   def kindOf(sourceTag: Column): Column = {
     val n = regexp_extract(sourceTag, "(\\d+)", 1).cast("long")

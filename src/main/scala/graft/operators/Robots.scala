@@ -107,10 +107,6 @@ object Robots {
     java.util.regex.Pattern.compile(sb.toString, java.util.regex.Pattern.DOTALL)
   }
 
-  /** does `pattern` match a prefix of `path` (all of it under `$`)? */
-  def patternMatches(pattern: String, path: String): Boolean =
-    toRegex(pattern).matcher(path).lookingAt()
-
   private final case class Compiled(allow: Boolean, len: Int,
                                     p: java.util.regex.Pattern)
 

@@ -179,8 +179,7 @@ object Temporal {
       points: DataFrame, tsCol: String,
       intervals: DataFrame, startCol: String, endCol: String,
       bucketSeconds: Long,
-      maxBucketsPerInterval: Option[Long] = None,
-      probeEmptyGiants: Boolean = true): DataFrame = {
+      maxBucketsPerInterval: Option[Long] = None): DataFrame = {
     val b = lit(bucketSeconds)
     def nBuckets(df: DataFrame) =
       (epochSeconds(df(endCol)) / b).cast("long") - (epochSeconds(df(startCol)) / b).cast("long") + 1
@@ -200,12 +199,9 @@ object Temporal {
     // execution — e.g. a view over a growing path — keeps the
     // probe-time plan; rebuild per run for moving data) and cannot run
     // on a streaming frame, which keeps the guard planned instead.
-    // `probeEmptyGiants = false` opts out for callers whose interval
-    // lineage is expensive to execute (the probe would re-run it once
-    // per build) — they keep the guard planned unconditionally.
     val giantsOpt = maxBucketsPerInterval.flatMap { m =>
       val g = intervals.filter(nBuckets(intervals) > m)
-      if (probeEmptyGiants && !intervals.isStreaming) materializeGiants(g)
+      if (!intervals.isStreaming) materializeGiants(g)
       else Some(g)
     }
     val normals =
@@ -250,8 +246,7 @@ object Temporal {
       left: DataFrame, lStartCol: String, lEndCol: String,
       right: DataFrame, rStartCol: String, rEndCol: String,
       bucketSeconds: Long,
-      maxBucketsPerInterval: Option[Long] = None,
-      probeEmptyGiants: Boolean = true): DataFrame = {
+      maxBucketsPerInterval: Option[Long] = None): DataFrame = {
     val b = lit(bucketSeconds)
     def nBuckets(df: DataFrame, s: String, e: String) =
       (epochSeconds(df(e)) / b).cast("long") - (epochSeconds(df(s)) / b).cast("long") + 1
@@ -277,12 +272,10 @@ object Temporal {
         // plan when a limit-1 probe finds an actual giant — two empty
         // broadcast unions otherwise tax every run for a guard that
         // never fires. Same build-time-snapshot caveat as rangeJoin's
-        // probe; streaming frames skip the probe and keep the guard,
-        // as does `probeEmptyGiants = false` (expensive-lineage
-        // opt-out — the probe is an extra job per build).
+        // probe; streaming frames skip the probe and keep the guard.
         def probeGiants(df: DataFrame, sc: String, ec: String): Option[DataFrame] = {
           val g = df.filter(nBuckets(df, sc, ec) > m)
-          if (probeEmptyGiants && !df.isStreaming) materializeGiants(g)
+          if (!df.isStreaming) materializeGiants(g)
           else Some(g)
         }
         val lGiant = probeGiants(left, lStartCol, lEndCol)

@@ -33,19 +33,27 @@ object ErrorRouting {
       col("created"),
       col("recovery"))
 
+  /** An async stage's per-row call, run once: returns the frame the
+    * branches route on and the stage without its call. The call result
+    * is CACHED (lazy localCheckpoint): the output and dead-letter
+    * branches are separate lineages, and without the cache each action
+    * would re-fire every RPC — doubling side effects, and near a
+    * timeout_ms boundary letting one evaluation time out while the
+    * other succeeds, putting a row in both branches or neither (the
+    * route-every-row-exactly-once contract, node/node.go:178-196,
+    * forbids both). Declarative stages stay uncached — they are
+    * deterministic and Catalyst re-derives them. Pipeline.buildNode
+    * calls this itself, to observe `<id>.received` below the break. */
+  def callOnce(input: DataFrame, stage: Stage): (DataFrame, Stage) = stage.pre match {
+    case Some(f) => (f(input).localCheckpoint(false), stage.copy(pre = None))
+    case None => (input, stage)
+  }
+
   def apply(input: DataFrame, stage: Stage): Split = {
     // async stages (Stage.pre) run their per-row call FIRST, so the
     // declarative branches below route on the call's outcome columns —
-    // an AsyncNode error-routes exactly like a SyncNode. The call
-    // result is CACHED (lazy localCheckpoint): the output and
-    // dead-letter branches are separate lineages, and without the
-    // cache each action would re-fire every RPC — doubling side
-    // effects, and near a timeout_ms boundary letting one evaluation
-    // time out while the other succeeds, putting a row in both
-    // branches or neither (the route-every-row-exactly-once contract,
-    // node/node.go:178-196, forbids both). Declarative stages stay
-    // uncached — they are deterministic and Catalyst re-derives them.
-    val pred = stage.pre.map(f => f(input).localCheckpoint(false)).getOrElse(input)
+    // an AsyncNode error-routes exactly like a SyncNode
+    val (pred, _) = callOnce(input, stage)
     val (ok0, dead) = stage.failWhen match {
       case Some(spec) =>
         // A NULL predicate (e.g. null payload reaching a parse check) must

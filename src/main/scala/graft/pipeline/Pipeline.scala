@@ -13,10 +13,11 @@ import graft.config.{AppConfig, NodeConf}
   *
   *   - source→roots broadcast + parent→children replication
   *     (`executor/executor.go:183-186`, `node/node.go:190-194`): the
-  *     same DataFrame is reused by every consumer; when a node has >1
-  *     active child its output is persisted in batch mode so the
-  *     upstream work runs once. The error handler is not a consumer of
-  *     the output: it reads the dead-letter lineage of the node's input.
+  *     same DataFrame is reused by every consumer; the source of a tree
+  *     with >1 active root, and the output of a node with >1 active
+  *     child, are persisted so the upstream work runs once. The error
+  *     handler is not a consumer of the output: it reads the
+  *     dead-letter lineage of the node's input.
   *   - per-node workers (`executor/executor.go:319-337`): a partition
   *     floor — the node's input is repartitioned up when it plans to
   *     fewer partitions than its configured workers (see buildNode).
@@ -41,7 +42,8 @@ object Pipeline {
       if (conf.id == id) Some(this)
       else children.view.flatMap(_.find(id)).headOption
 
-    /** all terminal outputs (leaves + error handler outputs), keyed by id */
+    /** all terminal outputs (leaves + error handler outputs), keyed as
+      * `Pipeline.leafKeys` keys them */
     def leaves: List[(String, DataFrame)] = {
       val own = if (children.isEmpty) List(conf.id -> output) else children.flatMap(_.leaves)
       own ++ errorHandlerOutput.map(conf.id + ".errors" -> _).toList
@@ -60,15 +62,41 @@ object Pipeline {
     def unpersistAll(): Unit = persisted.foreach(_.unpersist())
   }
 
+  /** A node as the tree delivers to it: its stage, and the children it
+    * delivers to — the active ones, and none below a terminal stage. */
+  private final case class Planned(conf: NodeConf, stage: Stage, children: List[Planned]) {
+    /** dead letters reach an error handler only from a stage that routes failures */
+    def routesErrors: Boolean = conf.errorHandler.isDefined && stage.failWhen.isDefined
+    def leafKeys: List[String] =
+      (if (children.isEmpty) List(conf.id) else children.flatMap(_.leafKeys)) ++
+        Option.when(routesErrors)(conf.id + ".errors")
+  }
+
+  private def plan(nodes: List[NodeConf], registry: Registry): List[Planned] =
+    nodes.filterNot(_.disabled).map { conf =>
+      val stage = registry.instantiateNode(conf.name, conf.params)
+      // Terminal stages (kafkaproducer returns (nil, nil),
+      // kafkaproducer.go:92-115) propagate nothing: children configured
+      // under one would otherwise receive the sink-projected frame, which
+      // the reference never delivers.
+      Planned(conf, stage, if (stage.terminal) Nil else plan(conf.children, registry))
+    }
+
+  /** The keys of `Built.leaves` for a tree, decided from config and
+    * registry alone: leaf ids plus `<id>.errors` for each node whose
+    * error handler receives dead letters. A stream keys its sinks with
+    * these before any micro-batch exists. */
+  def leafKeys(nodes: List[NodeConf], registry: Registry): List[String] =
+    plan(nodes, registry).flatMap(_.leafKeys)
+
   /** Build the full DAG for a config against a batch source DataFrame. */
   def build(
       spark: SparkSession,
       config: AppConfig,
       registry: Registry,
-      observeMetrics: Boolean = false,
-      persistShared: Boolean = true): Built = {
+      observeMetrics: Boolean = false): Built = {
     val src = registry.instantiateSource(config.source.name).read(spark, config.source.params)
-    buildOn(src, config.nodes, registry, observeMetrics, persistShared)
+    buildOn(src, config.nodes, registry, observeMetrics)
   }
 
   /** Build against an explicit source (tests, streaming micro-batches). */
@@ -76,12 +104,11 @@ object Pipeline {
       source: DataFrame,
       nodes: List[NodeConf],
       registry: Registry,
-      observeMetrics: Boolean = false,
-      persistShared: Boolean = true): Built = {
-    val activeRoots = nodes.filterNot(_.disabled)
+      observeMetrics: Boolean = false): Built = {
+    val activeRoots = plan(nodes, registry)
     val persisted = scala.collection.mutable.ListBuffer[DataFrame]()
     val src =
-      if (activeRoots.size > 1 && persistShared) {
+      if (activeRoots.size > 1) {
         val p = source.persist(StorageLevel.MEMORY_AND_DISK)
         persisted += p; p
       } else source
@@ -94,22 +121,21 @@ object Pipeline {
     lazy val srcParts = src.rdd.getNumPartitions
     def anyWorkers(ns: List[NodeConf]): Boolean =
       ns.exists(n => !n.disabled && (n.workers > 1 || anyWorkers(n.children)))
-    val parts = if (anyWorkers(activeRoots)) srcParts else Int.MaxValue
+    val parts = if (anyWorkers(nodes)) srcParts else Int.MaxValue
     Built(
       src,
-      activeRoots.map(buildNode(src, parts, _, registry, observeMetrics, persistShared, persisted)),
+      activeRoots.map(buildNode(src, parts, _, registry, observeMetrics, persisted)),
       persisted.toList)
   }
 
   private def buildNode(
       input: DataFrame,
       inputParts: Int,
-      conf: NodeConf,
+      node: Planned,
       registry: Registry,
       observe: Boolean,
-      persistShared: Boolean,
       persisted: scala.collection.mutable.ListBuffer[DataFrame]): BuiltNode = {
-    val stage = registry.instantiateNode(conf.name, conf.params)
+    val Planned(conf, stage, activeChildren) = node
     // discard_on_full_buffer load shedding (node/node.go:200-217): the
     // reference drops an event at delivery when the child's bounded
     // channel is full, instead of blocking the parent. Spark has no
@@ -203,27 +229,18 @@ object Pipeline {
           org.apache.spark.sql.functions.monotonically_increasing_id
             .bitwiseAND(lit((1L << 33) - 1)) < lit(conf.bufferSize.toLong))
       } else parallel0
-    val (preDone, stageForSplit) = stage.pre match {
-      case Some(f) => (f(parallel).localCheckpoint(false), stage.copy(pre = None))
-      case None => (parallel, stage)
-    }
+    val (called, routed) = ErrorRouting.callOnce(parallel, stage)
     val observed =
-      if (observe) preDone.observe(s"${conf.id}.received", count(lit(1)).as("count"))
-      else preDone
+      if (observe) called.observe(s"${conf.id}.received", count(lit(1)).as("count"))
+      else called
 
-    val split = ErrorRouting(observed, stageForSplit)
+    val split = ErrorRouting(observed, routed)
 
-    // Terminal stages (kafkaproducer returns (nil, nil),
-    // kafkaproducer.go:92-115) propagate nothing: children configured
-    // under one would otherwise receive the sink-projected frame, which
-    // the reference never delivers.
-    val activeChildren =
-      if (stage.terminal) Nil else conf.children.filterNot(_.disabled)
     // Only the children read the output; the error handler reads
     // split.deadLetters, a separate lineage from this node's input.
     val out0 = split.output
     val out =
-      if (activeChildren.size > 1 && persistShared) {
+      if (activeChildren.size > 1) {
         val p = out0.persist(StorageLevel.MEMORY_AND_DISK)
         persisted += p; p
       } else out0
@@ -252,6 +269,6 @@ object Pipeline {
       outObserved,
       split.deadLetters,
       errorHandlerOutput,
-      activeChildren.map(buildNode(outObserved, childParts, _, registry, observe, persistShared, persisted)))
+      activeChildren.map(buildNode(outObserved, childParts, _, registry, observe, persisted)))
   }
 }

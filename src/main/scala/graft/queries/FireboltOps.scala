@@ -95,7 +95,7 @@ object FireboltOps {
              |          - name: resultsnode
              |""".stripMargin
         val cfg = AppConfig.parse(yaml, reg).fold(e => sys.error(e), identity)
-        val built = Pipeline.build(s, cfg, reg, persistShared = false)
+        val built = Pipeline.build(s, cfg, reg)
         val results = built.find("resultsnode").get.output
           .select(lit("ok").as("branch"), col("payload").cast("string").as("payload"))
         val errors = built.find("errornode").get.errorHandlerOutput.get
@@ -140,7 +140,7 @@ object FireboltOps {
              |        discard_on_full_buffer: true
              |""".stripMargin
         val cfg = AppConfig.parse(yaml, reg).fold(e => sys.error(e), identity)
-        val built = Pipeline.build(s, cfg, reg, persistShared = false)
+        val built = Pipeline.build(s, cfg, reg)
         val kept = built.find("resultsnode").get.output.agg(count(lit(1)).as("kept"))
         val offered = built.find("filternode").get.output.agg(count(lit(1)).as("offered"))
         kept.crossJoin(offered)

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.config.AppConfig
 import graft.model.Nodeconfig
@@ -38,17 +37,17 @@ final class GraftApp private (
   /** Start the pipeline over an explicit source stream (tests, file
     * streams); Kafka deployments build the source via
     * `KafkaSourceConfig.stream` with offsets from
-    * `recovery.onAssignment`.
+    * `recovery.onAssignment`. `sinks` are keyed by leaf, as
+    * `Pipeline.leafKeys` lists them: dead letters reach a sink as the
+    * `<id>.errors` output of the node's error_handler (see
+    * `StreamingPipeline.run`).
     */
   def execute(
       source: DataFrame,
       sinks: Map[String, Sink],
-      deadLetterSinks: Map[String, Sink] = Map.empty,
-      checkpoint: Option[String] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingPipeline.Running = {
+      checkpoint: Option[String] = None): StreamingPipeline.Running = {
     val r = StreamingPipeline.run(
-      source, config, registry, sinks, deadLetterSinks, checkpoint, trigger,
-      queryName = config.applicationName)
+      source, config, registry, sinks, checkpoint, queryName = config.applicationName)
     running = Some(r)
     r
   }

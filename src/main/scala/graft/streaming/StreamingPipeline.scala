@@ -10,9 +10,16 @@ import graft.pipeline.{Pipeline, Registry}
 import graft.sinks.Sink
 
 /** Streaming execution of a config tree: one foreachBatch query over
-  * the source stream; inside each micro-batch the SAME Pipeline fold
-  * used by batch mode runs against the cached batch, and every leaf /
-  * dead-letter branch writes to its configured sink.
+  * the source stream, triggered as soon as the previous micro-batch
+  * ends; inside each micro-batch the SAME Pipeline fold used by batch
+  * mode runs against the cached batch, with per-node observe metrics,
+  * and every leaf that has a sink writes to it. A stream writes
+  * `Built.leaves` and nothing else: leaf ids, and `<id>.errors` for
+  * the output of a node's error_handler, the one way a dead letter
+  * leaves its node (`node/node.go:277-295`). A caller that wants the
+  * raw EventError rows configures `errorhandlernode`, which passes
+  * them through unchanged. A sink key that names no leaf fails `run`
+  * before the query starts; a leaf without a sink is not written.
   *
   * This is SURVEY §7 hard part (a) handled structurally: the micro
   * batch is persisted ONCE, so success/filtered/error splits never
@@ -26,14 +33,13 @@ import graft.sinks.Sink
   * instance (registered under several keys) run in order on its
   * thread. Two distinct sinks of one run must therefore not write to
   * the same location. Each write's jobs carry the description
-  * `graft sink <key> batch <batchId>` (the key is the leaf id, or
-  * `<node>.deadletters` for a dead-letter sink) and, inherited from the
-  * stream's thread, the query's job group, which `stop()` cancels. The
-  * batch waits for every write it started, then rethrows the first
-  * failure with the others suppressed; writes that committed before
-  * another failed are replayed with the whole batch on restart, as a
-  * prefix of sequential writes would be, which is why every bundled
-  * sink is idempotent per (sink, batchId).
+  * `graft sink <key> batch <batchId>` (the key is the leaf's) and,
+  * inherited from the stream's thread, the query's job group, which
+  * `stop()` cancels. The batch waits for every write it started, then
+  * rethrows the first failure with the others suppressed; writes that
+  * committed before another failed are replayed with the whole batch
+  * on restart, as a prefix of sequential writes would be, which is why
+  * every bundled sink is idempotent per (sink, batchId).
   *
   * Reference semantics carried over (`executor/executor.go:142-207`):
   * source→roots broadcast and parent→children replication happen by
@@ -70,15 +76,17 @@ object StreamingPipeline {
       config: AppConfig,
       registry: Registry,
       sinks: Map[String, Sink],
-      deadLetterSinks: Map[String, Sink] = Map.empty,
       checkpoint: Option[String] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
-      queryName: String = "graft-pipeline",
-      observeMetrics: Boolean = true): Running = {
+      queryName: String = "graft-pipeline"): Running = {
+    val leaves = Pipeline.leafKeys(config.nodes, registry)
+    val unknown = sinks.keys.filterNot(leaves.contains).toList.sorted
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(
+        s"sink keys name no leaf of the tree: ${unknown.mkString(", ")}; leaves: ${leaves.mkString(", ")}")
 
     val writer = source.writeStream
       .queryName(queryName)
-      .trigger(trigger)
+      .trigger(Trigger.ProcessingTime(0L))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val cached = batch.persist()
         // the OUTER finally guards the micro-batch cache even when
@@ -89,18 +97,10 @@ object StreamingPipeline {
         // finally unpersists the per-node MEMORY_AND_DISK caches
         // Pipeline.buildOn created, after every write has ended.
         try {
-          val built = Pipeline.buildOn(cached, config.nodes, registry,
-            observeMetrics = observeMetrics, persistShared = true)
+          val built = Pipeline.buildOn(cached, config.nodes, registry, observeMetrics = true)
           try {
-            val leafWrites = built.leaves.flatMap { case (id, df) =>
-              sinks.get(id).map(Write(id, _, df))
-            }
-            val deadWrites = for {
-              node <- walk(built.roots)
-              dead <- node.deadLetters
-              sink <- deadLetterSinks.get(node.conf.id)
-            } yield Write(s"${node.conf.id}.deadletters", sink, dead)
-            writeAll(leafWrites ++ deadWrites, batchId, queryName)
+            val writes = built.leaves.flatMap { case (id, df) => sinks.get(id).map(Write(id, _, df)) }
+            writeAll(writes, batchId, queryName)
           } finally { built.unpersistAll(); () }
         } finally { cached.unpersist(); () }
       }
@@ -153,7 +153,4 @@ object StreamingPipeline {
       try t.join()
       catch { case _: InterruptedException => () }
     }
-
-  private def walk(nodes: List[Pipeline.BuiltNode]): List[Pipeline.BuiltNode] =
-    nodes.flatMap(n => n :: walk(n.children))
 }

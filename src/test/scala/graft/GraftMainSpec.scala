@@ -82,12 +82,12 @@ class GraftMainSpec extends SparkSpec {
           current_timestamp().as("created"), lit(false).as("recovery"))
       }
     })
-    val cfg = graft.config.AppConfig.parse(
-      """application: keys
-        |source:
-        |  name: gmsrc
-        |nodes:
-        |  - name: filternode
+    // a tree with an error handler and two leaves; a terminal stage
+    // with configured children (they receive nothing, so the terminal
+    // node is the leaf); and an error handler under a stage that routes
+    // no failures, plus a disabled child (neither yields a leaf)
+    val trees = Seq(
+      """  - name: filternode
         |    children:
         |      - name: errornode
         |        error_handler:
@@ -96,9 +96,38 @@ class GraftMainSpec extends SparkSpec {
         |          - name: resultsnode
         |      - name: resultsnode
         |        id: secondleaf
-        |""".stripMargin, reg).fold(e => fail(e), identity)
-    val built = graft.pipeline.Pipeline.build(spark, cfg, reg)
-    assert(GraftMain.leafIds(cfg.nodes).toSet == built.leaves.map(_._1).toSet)
+        |""",
+      """  - name: stringtoproducerequestnode
+        |    children:
+        |      - name: kafkaproducer
+        |        children:
+        |          - name: kafkaproducer
+        |            id: downstream
+        |""",
+      """  - name: filternode
+        |    error_handler:
+        |      name: errorhandlernode
+        |    children:
+        |      - name: resultsnode
+        |      - name: resultsnode
+        |        id: off
+        |        disabled: true
+        |""")
+    val want = Seq(
+      Seq("resultsnode", "errornode.errors", "secondleaf"),
+      Seq("kafkaproducer"),
+      Seq("resultsnode"))
+    for ((nodes, expected) <- trees.zip(want)) {
+      val cfg = graft.config.AppConfig.parse(
+        "application: keys\nsource:\n  name: gmsrc\nnodes:\n" + nodes.stripMargin, reg)
+        .fold(e => fail(e), identity)
+      val built = graft.pipeline.Pipeline.build(spark, cfg, reg)
+      try {
+        assert(built.leaves.map(_._1) == expected)
+        // the keys GraftMain --stream writes are the same leaves
+        assert(graft.pipeline.Pipeline.leafKeys(cfg.nodes, reg) == expected)
+      } finally built.unpersistAll()
+    }
   }
 
   test("missing config file is a readable error, not a crash") {

@@ -7,7 +7,6 @@ import scala.concurrent.ExecutionContext
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.sinks.CollectingSink
@@ -139,9 +138,11 @@ class AsyncStageSpec extends SparkSpec {
   }
 
   test("the RPC fires exactly once per row per micro-batch while a stream writes both branches concurrently") {
-    // the kit tree of the streaming benchmark: the async node's success
-    // leaf, its error handler's leaf and its raw dead letters are three
-    // concurrent writes, all reading the node's lazy localCheckpoint
+    // the kit tree of the streaming benchmark plus a second child under
+    // the async node: its two children's leaves (through the node's
+    // output, persisted for two children) and its error handler's leaf
+    // are three concurrent writes, all reading the node's lazy
+    // localCheckpoint
     val calls = spark.sparkContext.longAccumulator("rpc_calls_stream")
     val reg = Registry.builtins()
     reg.registerNodeType("countingrpcnode", new StageFactory {
@@ -188,6 +189,8 @@ class AsyncStageSpec extends SparkSpec {
         |                    children:
         |                      - name: kafkaproducer
         |                        id: kitproducer
+        |              - name: resultsnode
+        |                id: rpcresults
         |""".stripMargin, reg).fold(e => fail(s"config rejected: $e"), identity)
     // per 20 events: 2 filtered, 3 errored, 3 RPC failures, 1 RPC skip, 11 ok;
     // the 15 that pass filternode and errornode reach the RPC
@@ -203,20 +206,17 @@ class AsyncStageSpec extends SparkSpec {
     val input = MemoryStream[String](s, 4)
     val source = input.toDF().select(col("value").as("payload"),
       lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("created"), lit(false).as("recovery"))
-    val sinks = Seq("kitproducer", "errornode.errors", "countingrpcnode.errors").map(_ -> new CollectingSink).toMap
-    val dead = new CollectingSink
-    val running = StreamingPipeline.run(source, cfg, reg, sinks = sinks,
-      deadLetterSinks = Map("countingrpcnode" -> dead), trigger = Trigger.ProcessingTime(0L),
-      queryName = "rpc-exactly-once")
+    val sinks = Seq("kitproducer", "rpcresults", "errornode.errors", "countingrpcnode.errors")
+      .map(_ -> new CollectingSink).toMap
+    val running = StreamingPipeline.run(source, cfg, reg, sinks = sinks, queryName = "rpc-exactly-once")
     try {
       for (b <- 1 to 4) {
         val before = calls.value
         input.addData((0 until 200).map(i => payload(b * 1000 + i)))
         running.query.processAllAvailable()
         assert(calls.value - before == 150L, s"batch $b: RPC fired ${calls.value - before} times for 150 rows")
-        assert(sinks.map { case (id, sink) => id -> sink.rows.size } == Map(
-          "kitproducer" -> 330 * b, "errornode.errors" -> 30 * b, "countingrpcnode.errors" -> 30 * b))
-        assert(dead.rows.size == 30 * b)
+        assert(sinks.map { case (id, sink) => id -> sink.rows.size } == Map("kitproducer" -> 330 * b,
+          "rpcresults" -> 110 * b, "errornode.errors" -> 30 * b, "countingrpcnode.errors" -> 30 * b))
       }
     } finally running.shutdown()
   }

@@ -68,7 +68,8 @@ class ErrorRoutingSpec extends SparkSpec {
          |        children:
          |          - name: resultsnode
          |""".stripMargin, reg).fold(e => sys.error(e), identity)
-    val built = Pipeline.buildOn(mix, cfg.nodes, reg, persistShared = false)
+    val built = Pipeline.buildOn(mix, cfg.nodes, reg)
+    assert(built.persisted.isEmpty)
     val results = built.find("resultsnode").get.output
     val deadLetters = built.find("errornode").get.deadLetters.get
     assert(results.count() == 10)
@@ -107,7 +108,8 @@ class ErrorRoutingSpec extends SparkSpec {
          |          - name: kafkaproducer
          |            id: downstream
          |""".stripMargin, reg).fold(e => sys.error(e), identity)
-    val built = Pipeline.buildOn(mix, cfg.nodes, reg, persistShared = false)
+    val built = Pipeline.buildOn(mix, cfg.nodes, reg)
+    assert(built.persisted.isEmpty)
     // the reference's terminal nodes return nil — downstream gets nothing
     assert(built.find("downstream").isEmpty)
     assert(built.find("kafkaproducer").get.children.isEmpty)
@@ -125,7 +127,8 @@ class ErrorRoutingSpec extends SparkSpec {
          |      - name: resultsnode
          |        disabled: true
          |""".stripMargin, reg).fold(e => sys.error(e), identity)
-    val built = Pipeline.buildOn(mix, cfg.nodes, reg, persistShared = false)
+    val built = Pipeline.buildOn(mix, cfg.nodes, reg)
+    assert(built.persisted.isEmpty)
     assert(built.find("resultsnode").isEmpty)
     assert(built.find("filternode").get.children.isEmpty)
   }

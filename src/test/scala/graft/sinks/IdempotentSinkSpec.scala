@@ -5,7 +5,6 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.config.AppConfig
@@ -65,8 +64,7 @@ class IdempotentSinkSpec extends SparkSpec {
       lit(Timestamp.valueOf("2024-01-01 00:00:00")).as("created"),
       lit(false).as("recovery"))
     val running = graft.streaming.StreamingPipeline.run(
-      source, cfg, reg, sinks = Map("resultsnode" -> new IdempotentParquetSink(dir)),
-      trigger = Trigger.ProcessingTime(0L))
+      source, cfg, reg, sinks = Map("resultsnode" -> new IdempotentParquetSink(dir)))
     try {
       input.addData("a", "b")
       running.query.processAllAvailable()

@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.SparkSpec
 import graft.config.AppConfig
@@ -54,8 +54,7 @@ class ChaosDrillSpec extends SparkSpec {
     */
   private final class CrashOnceSink(inner: Sink, armFlag: Path) extends Sink {
     @volatile private var tripped = false
-    def writeBatch(df: DataFrame): Unit = writeBatch(df, 0L)
-    override def writeBatch(df: DataFrame, batchId: Long): Unit = {
+    def writeBatch(df: DataFrame, batchId: Long): Unit = {
       inner.writeBatch(df, batchId)
       if (!tripped && Files.exists(armFlag)) {
         tripped = true
@@ -139,8 +138,7 @@ class ChaosDrillSpec extends SparkSpec {
     val wave1 = wave("w1", 40)
     wave1.toDF("v").write.mode("append").parquet(srcDir)
     val runA = appA.execute(fileSource(s, srcDir),
-      Map("resultsnode" -> resultsA), Map("asyncrpcnode" -> dlqA),
-      checkpoint = Some(cp), trigger = Trigger.ProcessingTime(0L))
+      Map("resultsnode" -> resultsA, "asyncrpcnode.errors" -> dlqA), checkpoint = Some(cp))
     runA.query.processAllAvailable()
 
     // live scrape while A runs: reference-named counters are visible
@@ -185,9 +183,9 @@ class ChaosDrillSpec extends SparkSpec {
     try {
       // same sinks minus the fault injector; same dirs, same checkpoint
       val runB = appB.execute(fileSource(s2, srcDir),
-        Map("resultsnode" -> new IdempotentParquetSink(resultsDir)),
-        Map("asyncrpcnode" -> new IdempotentParquetSink(dlqDir)),
-        checkpoint = Some(cp), trigger = Trigger.ProcessingTime(0L))
+        Map("resultsnode" -> new IdempotentParquetSink(resultsDir),
+          "asyncrpcnode.errors" -> new IdempotentParquetSink(dlqDir)),
+        checkpoint = Some(cp))
       runB.query.processAllAvailable()
 
       // wave 3 proves B keeps consuming beyond the redelivery
@@ -220,8 +218,7 @@ class ChaosDrillSpec extends SparkSpec {
       val replaySrc = replay.toDF().select(col("value").as("payload"),
         lit(ts).as("created"), lit(true).as("recovery"))
       val runRec = appB.execute(replaySrc,
-        Map("resultsnode" -> recResults), Map("asyncrpcnode" -> new IdempotentParquetSink(s"$root/rec-dlq")),
-        trigger = Trigger.ProcessingTime(0L))
+        Map("resultsnode" -> recResults, "asyncrpcnode.errors" -> new IdempotentParquetSink(s"$root/rec-dlq")))
       val recRows = (100L until 300L).map(o => s"ok rec-$o")
       replay.addData(recRows)
       runRec.query.processAllAvailable()
@@ -278,6 +275,8 @@ class ChaosDrillSpec extends SparkSpec {
       |          name: errorhandlernode
       |        children:
       |          - name: resultsnode
+      |          - name: resultsnode
+      |            id: copynode
       |""".stripMargin
 
   private def mix(tag: String, n: Int): Seq[String] =
@@ -287,36 +286,35 @@ class ChaosDrillSpec extends SparkSpec {
 
   /** counts the writes in flight; `before` runs ahead of the inner write */
   private final class Tracked(inner: Sink, inFlight: AtomicInteger, before: Long => Unit) extends Sink {
-    def writeBatch(df: DataFrame): Unit = writeBatch(df, 0L)
-    override def writeBatch(df: DataFrame, batchId: Long): Unit = {
+    def writeBatch(df: DataFrame, batchId: Long): Unit = {
       inFlight.incrementAndGet()
       try { before(batchId); inner.writeBatch(df, batchId) }
       finally { inFlight.decrementAndGet(); () }
     }
   }
 
-  /** TreeYaml's three sinks: the success leaf, the error handler's leaf
-    * and the raw dead letters of errornode; `wrap` decorates each by key */
+  /** TreeYaml's three leaves, each with its own sink: the success leaf,
+    * its copy and the error handler's leaf; `wrap` decorates each by key */
   private def startTree(s: SparkSession, root: Path, name: String)(wrap: (String, Sink) => Sink) = {
     val reg = Registry.builtins()
     val cfg = AppConfig.parse(TreeYaml, reg).fold(e => fail(s"config rejected: $e"), identity)
     def sink(key: String) = wrap(key, new IdempotentParquetSink(s"$root/$key"))
     StreamingPipeline.run(fileSource(s, s"$root/in"), cfg, reg,
-      sinks = Map("resultsnode" -> sink("results"), "errornode.errors" -> sink("errors")),
-      deadLetterSinks = Map("errornode" -> sink("dlq")),
+      sinks = Map("resultsnode" -> sink("results"), "copynode" -> sink("copy"),
+        "errornode.errors" -> sink("errors")),
       checkpoint = Some(s"$root/checkpoint"), queryName = name)
   }
 
   /** each sink holds exactly what `waves` imply, once */
   private def assertExact(s: SparkSession, root: Path, waves: Seq[String]): Unit = {
     import s.implicits._
-    val results = s.read.parquet(s"$root/results").select("payload").as[String].collect().sorted.toSeq
-    assert(results == waves.filter(_.startsWith("ok")).sorted, s"results: ${results.length} rows")
-    val errors = waves.filter(_.startsWith("error")).sorted
-    for (key <- Seq("errors", "dlq")) {
-      val got = s.read.parquet(s"$root/$key").select(col("payload.event")).as[String].collect().sorted.toSeq
-      assert(got == errors, s"$key: ${got.length} rows, expected ${errors.length}")
+    for (key <- Seq("results", "copy")) {
+      val got = s.read.parquet(s"$root/$key").select("payload").as[String].collect().sorted.toSeq
+      assert(got == waves.filter(_.startsWith("ok")).sorted, s"$key: ${got.length} rows")
     }
+    val errors = waves.filter(_.startsWith("error")).sorted
+    val got = s.read.parquet(s"$root/errors").select(col("payload.event")).as[String].collect().sorted.toSeq
+    assert(got == errors, s"errors: ${got.length} rows, expected ${errors.length}")
   }
 
   private def committed(root: Path, key: String, batchId: Long): Boolean =
@@ -343,7 +341,7 @@ class ChaosDrillSpec extends SparkSpec {
     intercept[StreamingQueryException] { run.query.awaitTermination() }
     // the batch returned only after its other writes ended: the slow one committed
     assert(!run.query.isActive && inFlight.get == 0, s"${inFlight.get} writes still running")
-    assert(committed(root, "results", 1) && committed(root, "dlq", 1) && !committed(root, "errors", 1))
+    assert(committed(root, "results", 1) && committed(root, "copy", 1) && !committed(root, "errors", 1))
 
     // the sink stops throwing; the failed batch replays whole
     val again = startTree(s, root, "chaos-throw")((_, inner) => inner)
@@ -382,7 +380,7 @@ class ChaosDrillSpec extends SparkSpec {
     w2.toDF("v").write.mode("append").parquet(s"$root/in")
     assert(started.await(60, TimeUnit.SECONDS), "batch 1 never reached the slow write")
     // stop once the two fast writes of batch 1 have returned
-    def fastDone = committed(root, "errors", 1) && committed(root, "dlq", 1) && fastInFlight.get == 0
+    def fastDone = committed(root, "errors", 1) && committed(root, "copy", 1) && fastInFlight.get == 0
     val deadline = System.currentTimeMillis() + 60000
     while (!fastDone && System.currentTimeMillis() < deadline) Thread.sleep(20)
     assert(fastDone, "the fast writes of batch 1 did not return")
@@ -392,7 +390,7 @@ class ChaosDrillSpec extends SparkSpec {
     assert(alive.isEmpty, s"batch threads outlived shutdown(): ${alive.map(_.getName)}")
     assert(Files.exists(marker), "shutdown() returned before the slow write ended")
     assert(run.query.exception.isEmpty, s"stop was not clean: ${run.query.exception}")
-    def listing: Map[String, (Long, Long)] = Seq("results", "errors", "dlq").flatMap { key =>
+    def listing: Map[String, (Long, Long)] = Seq("results", "copy", "errors").flatMap { key =>
       Files.walk(root.resolve(key)).iterator().asScala.filter(Files.isRegularFile(_)).map { f =>
         f.toString -> ((Files.size(f), Files.getLastModifiedTime(f).toMillis))
       }.toSeq

@@ -3,7 +3,6 @@ package graft.streaming
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.config.AppConfig
@@ -49,8 +48,7 @@ class CheckpointResumeSpec extends SparkSpec {
     (1 to 10).map(i => s"wave1-$i").toDF("v").write.mode("append").parquet(srcDir)
     val sink1 = new CollectingSink
     val run1 = StreamingPipeline.run(source(), cfg, reg,
-      sinks = Map("resultsnode" -> sink1), checkpoint = Some(cp),
-      trigger = Trigger.ProcessingTime(0L))
+      sinks = Map("resultsnode" -> sink1), checkpoint = Some(cp))
     run1.query.processAllAvailable()
     run1.shutdown()
     assert(sink1.rows.map(_.getString(0)).count(_.startsWith("wave1")) == 10)
@@ -61,8 +59,7 @@ class CheckpointResumeSpec extends SparkSpec {
     // run 2 from the same checkpoint: ONLY wave 2, no re-replay
     val sink2 = new CollectingSink
     val run2 = StreamingPipeline.run(source(), cfg, reg,
-      sinks = Map("resultsnode" -> sink2), checkpoint = Some(cp),
-      trigger = Trigger.ProcessingTime(0L))
+      sinks = Map("resultsnode" -> sink2), checkpoint = Some(cp))
     run2.query.processAllAvailable()
     run2.shutdown()
 

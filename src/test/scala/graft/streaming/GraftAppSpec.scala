@@ -78,8 +78,7 @@ class GraftAppSpec extends SparkSpec {
     val deadLetters = new CollectingSink
     val running = app.execute(
       source,
-      sinks = Map("errornode" -> results),
-      deadLetterSinks = Map("errornode" -> deadLetters))
+      sinks = Map("errornode" -> results, "errornode.errors" -> deadLetters))
 
     input.addData("ok-1", "filterme-2", "error-3", "ok-4")
     running.query.processAllAvailable()

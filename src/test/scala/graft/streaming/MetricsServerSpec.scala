@@ -6,7 +6,6 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.config.AppConfig
@@ -62,8 +61,7 @@ class MetricsServerSpec extends SparkSpec {
         lit(false).as("recovery"))
       val results = new CollectingSink
       val running = StreamingPipeline.run(
-        source, cfg, reg, sinks = Map("resultsnode" -> results),
-        trigger = Trigger.ProcessingTime(0L))
+        source, cfg, reg, sinks = Map("resultsnode" -> results))
       try {
         input.addData((1 to 10).map(i => s"success $i") ++ (1 to 5).map(i => s"filterme $i"))
         running.query.processAllAvailable()

@@ -7,7 +7,6 @@ import scala.collection.mutable.ListBuffer
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.pipeline.Registry
@@ -91,8 +90,7 @@ class RecoveryDrillSpec extends SparkSpec {
       val live = MemoryStream[String](s)
       val liveSrc = live.toDF().select(col("value").as("payload"),
         lit(ts).as("created"), lit(false).as("recovery"))
-      val r1 = app.execute(liveSrc, Map("resultsnode" -> results),
-        Map("errornode" -> dlq), trigger = Trigger.ProcessingTime(0L))
+      val r1 = app.execute(liveSrc, Map("resultsnode" -> results, "errornode.errors" -> dlq))
       live.addData(for { p <- 0 to 3; o <- 900L until 1000L } yield payload(p, o))
       r1.query.processAllAvailable()
       app.shutdown()
@@ -114,8 +112,7 @@ class RecoveryDrillSpec extends SparkSpec {
       val replay = MemoryStream[String](s)
       val replaySrc = replay.toDF().select(col("value").as("payload"),
         lit(ts).as("created"), lit(true).as("recovery"))
-      val r2 = app.execute(replaySrc, Map("resultsnode" -> results),
-        Map("errornode" -> dlq), trigger = Trigger.ProcessingTime(0L))
+      val r2 = app.execute(replaySrc, Map("resultsnode" -> results, "errornode.errors" -> dlq))
 
       // first chunk, then a progress checkpoint advances the ledger
       val mid = 650L
@@ -158,7 +155,8 @@ class RecoveryDrillSpec extends SparkSpec {
       assert(recRows.map(_.getString(0)).sorted == survivors(p => from(p) until to(p)))
       // per-partition recovered consumption is exactly 500
       (0 to 3).foreach(p => assert(to(p) - from(p) == 500L))
-      // dead letters flow for both live and recovered events
+      // dead letters flow for both live and recovered events, through
+      // errornode's error handler (errorhandlernode passes them unchanged)
       val dlPayloads = dlq.rows.map(_.getStruct(0).getString(1))
       val expectedErrors = (for { p <- 0 to 3; o <- (400L until 1000L) }
         yield payload(p, o)).filter(_.startsWith("error")).sorted

@@ -50,13 +50,12 @@ class StreamingPipelineSpec extends SparkSpec {
       lit(Timestamp.valueOf("2024-01-01 00:00:00")).as("created"),
       lit(false).as("recovery"))
 
+    // errorhandlernode passes the EventError rows through unchanged
     val results = new CollectingSink
     val deadLetters = new CollectingSink
     val running = StreamingPipeline.run(
       source, cfg, reg,
-      sinks = Map("resultsnode" -> results),
-      deadLetterSinks = Map("errornode" -> deadLetters),
-      trigger = Trigger.ProcessingTime(0L))
+      sinks = Map("resultsnode" -> results, "errornode.errors" -> deadLetters))
 
     try {
       input.addData((1 to 10).map(i => s"success $i"))
@@ -106,9 +105,7 @@ class StreamingPipelineSpec extends SparkSpec {
     val deadLetters = new CollectingSink
     val running = StreamingPipeline.run(
       source, cfg, reg,
-      sinks = Map("resultsnode" -> results),
-      deadLetterSinks = Map("asyncrpcnode" -> deadLetters),
-      trigger = Trigger.ProcessingTime(0L))
+      sinks = Map("resultsnode" -> results, "asyncrpcnode.errors" -> deadLetters))
     try {
       input.addData((1 to 8).map(i => s"success $i") ++ Seq("error 1", "filterme 1"))
       running.query.processAllAvailable()
@@ -146,11 +143,7 @@ class StreamingPipelineSpec extends SparkSpec {
       lit(Timestamp.valueOf("2024-01-01 00:00:00")).as("created"),
       lit(false).as("recovery"))
     val results = new CollectingSink
-    val running = StreamingPipeline.run(
-      source, cfg, reg,
-      sinks = Map("resultsnode" -> results),
-      deadLetterSinks = Map.empty,
-      trigger = Trigger.ProcessingTime(0L))
+    val running = StreamingPipeline.run(source, cfg, reg, sinks = Map("resultsnode" -> results))
     try {
       // 6 tokens, size 4, stride 3 → 2 chunks; 3 tokens → 1 chunk
       input.addData(Seq("one two three four five six", "a b c"))
@@ -200,8 +193,8 @@ class StreamingPipelineSpec extends SparkSpec {
       val mix = ((1 to 10).map(i => s"success $i") ++ (1 to 5).map(i => s"filterme $i"))
         .toDF("payload")
         .select(col("payload"), current_timestamp().as("created"), lit(false).as("recovery"))
-      val built = graft.pipeline.Pipeline.buildOn(mix, cfg.nodes, reg,
-        observeMetrics = true, persistShared = false)
+      val built = graft.pipeline.Pipeline.buildOn(mix, cfg.nodes, reg, observeMetrics = true)
+      assert(built.persisted.isEmpty)
       built.roots.head.output.collect() // action triggers listener
       // listener callbacks are async — poll for arrival
       val deadline = System.currentTimeMillis() + 10000
@@ -236,8 +229,8 @@ class StreamingPipelineSpec extends SparkSpec {
         .toDF("payload")
         .select(col("payload"), current_timestamp().as("created"), lit(false).as("recovery"))
         .repartition(1)
-      val built = graft.pipeline.Pipeline.buildOn(mix, cfg.nodes, reg,
-        observeMetrics = true, persistShared = false)
+      val built = graft.pipeline.Pipeline.buildOn(mix, cfg.nodes, reg, observeMetrics = true)
+      assert(built.persisted.isEmpty)
       val out = built.find("resultsnode").get.output.collect()
       assert(out.length == 7, s"expected the cap, got ${out.length}")
       // survivors are real upstream rows, not fabricated
@@ -273,8 +266,8 @@ class StreamingPipelineSpec extends SparkSpec {
     val mix = (1 to 60).map(i => s"success $i").toDF("payload")
       .select(col("payload"), current_timestamp().as("created"), lit(false).as("recovery"))
       .repartition(1)
-    val built = graft.pipeline.Pipeline.buildOn(mix, cfg.nodes, reg,
-      observeMetrics = false, persistShared = false)
+    val built = graft.pipeline.Pipeline.buildOn(mix, cfg.nodes, reg)
+    assert(built.persisted.isEmpty)
     val out = built.find("resultsnode").get.output
     assert(out.rdd.getNumPartitions == 3, "shed must not collapse parallelism")
     val perPart = out.rdd.mapPartitions(it => Iterator.single(it.size)).collect().toSeq
@@ -305,8 +298,8 @@ class StreamingPipelineSpec extends SparkSpec {
     val mix = (1 to 60).map(i => s"success $i").toDF("payload")
       .select(col("payload"), current_timestamp().as("created"), lit(false).as("recovery"))
       .repartition(8)
-    val built = graft.pipeline.Pipeline.buildOn(mix, cfg.nodes, reg,
-      observeMetrics = false, persistShared = false)
+    val built = graft.pipeline.Pipeline.buildOn(mix, cfg.nodes, reg)
+    assert(built.persisted.isEmpty)
     val out = built.find("resultsnode").get.output
     assert(out.rdd.getNumPartitions == 3, "shed must pin the channel count to workers")
     assert(out.count() == 15L, "capacity must be workers x buffersize, not buffersize x splits")
@@ -323,8 +316,8 @@ class StreamingPipelineSpec extends SparkSpec {
         |        buffersize: 7
         |        discard_on_full_buffer: true
         |""".stripMargin, reg).fold(e => sys.error(e), identity)
-    val built1 = graft.pipeline.Pipeline.buildOn(mix, cfg1.nodes, reg,
-      observeMetrics = false, persistShared = false)
+    val built1 = graft.pipeline.Pipeline.buildOn(mix, cfg1.nodes, reg)
+    assert(built1.persisted.isEmpty)
     assert(built1.find("resultsnode").get.output.count() == 7L)
   }
 
@@ -403,7 +396,7 @@ class StreamingPipelineSpec extends SparkSpec {
     val input = MemoryStream[String](s)
     val source = input.toDF().select(col("value").as("payload"), lit(ts).as("created"), lit(false).as("recovery"))
     val sinks = Seq("kitproducer", "errornode.errors", "asyncrpcnode.errors").map(_ -> new CollectingSink).toMap
-    val running = StreamingPipeline.run(source, kit, reg, sinks = sinks, trigger = Trigger.ProcessingTime(0L))
+    val running = StreamingPipeline.run(source, kit, reg, sinks = sinks)
     try {
       input.addData(events)
       running.query.processAllAvailable()
@@ -442,6 +435,8 @@ class StreamingPipelineSpec extends SparkSpec {
         |          name: errorhandlernode
         |        children:
         |          - name: resultsnode
+        |          - name: resultsnode
+        |            id: copynode
         |""".stripMargin, reg).fold(e => sys.error(e), identity)
     val jobs = new ConcurrentLinkedQueue[(String, String)]()
     val listener = new SparkListener {
@@ -457,28 +452,27 @@ class StreamingPipelineSpec extends SparkSpec {
       val threads = new ConcurrentLinkedQueue[String]()
       val active = new AtomicInteger()
       @volatile var overlapped = false
-      def writeBatch(df: DataFrame): Unit = {
+      def writeBatch(df: DataFrame, batchId: Long): Unit = {
         if (active.incrementAndGet() > 1) overlapped = true
         threads.add(Thread.currentThread.getName)
-        try { Thread.sleep(50); inner.writeBatch(df) } finally { active.decrementAndGet(); () }
+        try { Thread.sleep(50); inner.writeBatch(df, batchId) } finally { active.decrementAndGet(); () }
       }
     }
-    val shared = new ThreadProbe // one instance under two keys
-    val errors = new ThreadProbe
+    val shared = new ThreadProbe // one instance under two leaf keys
+    val copies = new ThreadProbe
     val input = MemoryStream[String](s)
     val source = input.toDF().select(col("value").as("payload"),
       lit(Timestamp.valueOf("2024-01-01 00:00:00")).as("created"), lit(false).as("recovery"))
     s.sparkContext.addSparkListener(listener)
     val running = StreamingPipeline.run(source, cfg, reg,
-      sinks = Map("resultsnode" -> shared, "errornode.errors" -> errors),
-      deadLetterSinks = Map("errornode" -> shared),
-      trigger = Trigger.ProcessingTime(0L), queryName = "labeltest")
+      sinks = Map("resultsnode" -> shared, "errornode.errors" -> shared, "copynode" -> copies),
+      queryName = "labeltest")
     try {
       for (b <- 0 until 3) {
         input.addData(Seq(s"ok $b", s"error $b", s"filterme $b"))
         running.query.processAllAvailable()
       }
-      val keys = Seq("resultsnode", "errornode.errors", "errornode.deadletters")
+      val keys = Seq("resultsnode", "errornode.errors", "copynode")
       val want = for (b <- 0 until 3; k <- keys) yield s"graft sink $k batch $b"
       val deadline = System.currentTimeMillis() + 10000
       while (!want.forall(w => jobs.asScala.exists(_._1 == w)) && System.currentTimeMillis() < deadline)
@@ -489,13 +483,13 @@ class StreamingPipelineSpec extends SparkSpec {
       val runId = running.query.runId.toString
       assert(seen.forall(_._2 == runId), s"a write's job left the query's group $runId: $seen")
 
-      assert(shared.inner.rows.size == 6 && errors.inner.rows.size == 3)
+      assert(shared.inner.rows.size == 6 && copies.inner.rows.size == 3)
       assert(!shared.overlapped, "two writes to one sink instance overlapped")
       val sharedThreads = shared.threads.asScala.toSeq
-      val errorThreads = errors.threads.asScala.toSeq
+      val copyThreads = copies.threads.asScala.toSeq
       assert(sharedThreads.length == 6 && sharedThreads.distinct.length == 3, sharedThreads)
       assert(sharedThreads.forall(_.startsWith("graft-sink-labeltest-")), sharedThreads)
-      assert(sharedThreads.toSet.intersect(errorThreads.toSet).isEmpty, "distinct instances shared a thread")
+      assert(sharedThreads.toSet.intersect(copyThreads.toSet).isEmpty, "distinct instances shared a thread")
     } finally {
       running.shutdown()
       s.sparkContext.removeSparkListener(listener)
@@ -530,9 +524,7 @@ class StreamingPipelineSpec extends SparkSpec {
     val source = input.toDF().select(col("value").cast("binary").as("payload"),
       lit(Timestamp.valueOf("2024-01-01 00:00:00")).as("created"), lit(false).as("recovery"))
     val sinks = Seq("kafkaproducer", "elasticsearch", "syslogparser.errors").map(_ -> new CollectingSink).toMap
-    val dead = new CollectingSink
-    val running = StreamingPipeline.run(source, cfg, reg, sinks = sinks,
-      deadLetterSinks = Map("syslogparser" -> dead), trigger = Trigger.ProcessingTime(0L))
+    val running = StreamingPipeline.run(source, cfg, reg, sinks = sinks)
     val bad = "<13>Oct 11 host: msg"
     try {
       input.addData((1 to 5).map(i => s"<13>2024-01-01T00:00:0${i}Z host$i app[$i]: msg $i") :+ bad)
@@ -540,8 +532,43 @@ class StreamingPipelineSpec extends SparkSpec {
       assert(running.query.exception.isEmpty)
       assert(sinks.map { case (id, sink) => id -> sink.rows.size } ==
         Map("kafkaproducer" -> 5, "elasticsearch" -> 5, "syslogparser.errors" -> 1))
-      assert(dead.rows.map(r => (r.getStruct(0).getString(1), r.getStruct(0).getStruct(2).getString(0))) ==
-        Seq(bad -> "ERR_PARSE"))
+      // the error handler's dead-letter document carries the raw line and its code
+      val docs = sinks("syslogparser.errors").rows.map(r => new String(r.getAs[Array[Byte]]("value"), "UTF-8"))
+      assert(docs.size == 1 && docs.head.contains(s""""event":"$bad",""") &&
+        docs.head.contains(""""error":{"code":"ERR_PARSE","""), docs)
     } finally running.shutdown()
+  }
+
+  test("a sink key that names no leaf is rejected before the query starts") {
+    val s = spark
+    import s.implicits._
+    val reg = Registry.builtins()
+    val cfg = AppConfig.parse(
+      """application: keytest
+        |source:
+        |  name: stringsource
+        |  params: {path: unused}
+        |nodes:
+        |  - name: filternode
+        |    children:
+        |      - name: errornode
+        |        error_handler:
+        |          name: errorhandlernode
+        |        children:
+        |          - name: resultsnode
+        |""".stripMargin, reg).fold(e => sys.error(e), identity)
+    val input = MemoryStream[String](s)
+    val source = input.toDF().select(col("value").as("payload"),
+      lit(Timestamp.valueOf("2024-01-01 00:00:00")).as("created"), lit(false).as("recovery"))
+    val before = s.streams.active.length
+    // `errornode` is the old raw dead-letter key; the tree's leaves are
+    // resultsnode and errornode.errors
+    val ex = intercept[IllegalArgumentException] {
+      StreamingPipeline.run(source, cfg, reg, queryName = "keytest",
+        sinks = Map("resultsnode" -> new CollectingSink, "errornode" -> new CollectingSink))
+    }
+    assert(ex.getMessage.contains("errornode;"), ex.getMessage)
+    assert(ex.getMessage.contains("leaves: resultsnode, errornode.errors"), ex.getMessage)
+    assert(s.streams.active.length == before, "a query started before the keys were checked")
   }
 }
