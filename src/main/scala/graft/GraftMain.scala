@@ -84,19 +84,18 @@ object GraftMain {
         if (config.source.name != "kafkaconsumer")
           return Left(s"--stream requires a kafkaconsumer source, got [${config.source.name}]")
         val source = KafkaSourceConfig.stream(spark, config.source.params)
-        // exactly-once landing: batch-id-keyed commit dirs, so an epoch
-        // retry after a sink failure never duplicates records
-        val sinks = Pipeline.leafKeys(config.nodes, app.registry)
+        // exactly-once landing: (query id, batch id)-keyed commit dirs,
+        // so an epoch retry after a sink failure never duplicates records
+        val sinks = Pipeline.plan(config.nodes, app.registry).leafKeys
           .map(id => id -> new IdempotentParquetSink(s"$outDir/$id")).toMap
         val running = app.execute(source, sinks,
           checkpoint = Some(s"$outDir/_checkpoint"))
         running.query.awaitTermination()
       } else {
         val built = Pipeline.build(spark, config, app.registry, observeMetrics = true)
-        built.leaves.foreach { case (id, df) =>
+        try built.leaves.foreach { case (id, df) =>
           df.write.mode("overwrite").parquet(s"$outDir/$id")
-        }
-        built.unpersistAll()
+        } finally built.unpersistAll()
       }
       // observe metrics arrive via an async listener — give them a
       // bounded moment to land before the summary snapshot

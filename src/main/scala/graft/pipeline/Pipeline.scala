@@ -1,12 +1,19 @@
 package graft.pipeline
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.config.{AppConfig, NodeConf}
 
-/** Folds a validated config tree into a DataFrame DAG.
+/** Plans a validated config tree once, then folds it into a DataFrame
+  * DAG. `plan` instantiates every stage, as the reference does once at
+  * startup (`node/node.go:76-127`); batch mode applies the immutable
+  * [[Plan]] once, a stream applies it to every micro-batch. `buildOn`
+  * never persists its source: `build` persists the read source when
+  * the tree has >1 active root, a stream persists each micro-batch.
   *
   * Mapping of the reference's execution semantics
   * (`executor/executor.go:142-207`) onto Spark:
@@ -41,101 +48,88 @@ object Pipeline {
     def find(id: String): Option[BuiltNode] =
       if (conf.id == id) Some(this)
       else children.view.flatMap(_.find(id)).headOption
-
-    /** all terminal outputs (leaves + error handler outputs), keyed as
-      * `Pipeline.leafKeys` keys them */
-    def leaves: List[(String, DataFrame)] = {
-      val own = if (children.isEmpty) List(conf.id -> output) else children.flatMap(_.leaves)
-      own ++ errorHandlerOutput.map(conf.id + ".errors" -> _).toList
-    }
   }
 
   final case class Built(
-      source: DataFrame,
       roots: List[BuiltNode],
+      /** terminal outputs (leaves + error handler outputs), as `Plan.leafKeys` */
+      leaves: List[(String, DataFrame)],
       /** every frame this build persisted (shared source + multi-child
         * node outputs) — streaming callers MUST unpersist these after each
         * micro-batch or a long-running stream accumulates cached blocks */
-      persisted: List[DataFrame] = Nil) {
+      persisted: List[DataFrame]) {
     def find(id: String): Option[BuiltNode] = roots.view.flatMap(_.find(id)).headOption
-    def leaves: List[(String, DataFrame)] = roots.flatMap(_.leaves)
     def unpersistAll(): Unit = persisted.foreach(_.unpersist())
   }
 
-  /** A node as the tree delivers to it: its stage, and the children it
-    * delivers to — the active ones, and none below a terminal stage. */
-  private final case class Planned(conf: NodeConf, stage: Stage, children: List[Planned]) {
-    /** dead letters reach an error handler only from a stage that routes failures */
-    def routesErrors: Boolean = conf.errorHandler.isDefined && stage.failWhen.isDefined
+  /** A node as the tree delivers to it: its stage, its error handler's
+    * stage if dead letters reach it (the stage has a failWhen), and the
+    * children it delivers to — the active ones, none below a terminal
+    * stage. A node without children is a leaf, a handler adds `<id>.errors`. */
+  private final case class Node(conf: NodeConf, stage: Stage, handler: Option[Stage], children: List[Node]) {
     def leafKeys: List[String] =
       (if (children.isEmpty) List(conf.id) else children.flatMap(_.leafKeys)) ++
-        Option.when(routesErrors)(conf.id + ".errors")
+        handler.map(_ => errorsKey(conf.id))
+    def setsWorkers: Boolean = conf.workers > 1 || children.exists(_.setsWorkers)
   }
 
-  private def plan(nodes: List[NodeConf], registry: Registry): List[Planned] =
-    nodes.filterNot(_.disabled).map { conf =>
-      val stage = registry.instantiateNode(conf.name, conf.params)
-      // Terminal stages (kafkaproducer returns (nil, nil),
-      // kafkaproducer.go:92-115) propagate nothing: children configured
-      // under one would otherwise receive the sink-projected frame, which
-      // the reference never delivers.
-      Planned(conf, stage, if (stage.terminal) Nil else plan(conf.children, registry))
-    }
+  private def errorsKey(id: String): String = s"$id.errors"
 
-  /** The keys of `Built.leaves` for a tree, decided from config and
-    * registry alone: leaf ids plus `<id>.errors` for each node whose
-    * error handler receives dead letters. A stream keys its sinks with
-    * these before any micro-batch exists. */
-  def leafKeys(nodes: List[NodeConf], registry: Registry): List[String] =
-    plan(nodes, registry).flatMap(_.leafKeys)
+  def plan(nodes: List[NodeConf], registry: Registry): Plan = {
+    def stage(c: NodeConf) = registry.instantiateNode(c.name, c.params)
+    def planNodes(ns: List[NodeConf]): List[Node] =
+      ns.filterNot(_.disabled).map { conf =>
+        val s = stage(conf)
+        // Terminal stages (kafkaproducer returns (nil, nil),
+        // kafkaproducer.go:92-115) propagate nothing: children configured
+        // under one would otherwise receive the sink-projected frame, which
+        // the reference never delivers.
+        Node(conf, s, if (s.failWhen.isDefined) conf.errorHandler.map(stage) else None,
+          if (s.terminal) Nil else planNodes(conf.children))
+      }
+    new Plan(planNodes(nodes))
+  }
 
-  /** Build the full DAG for a config against a batch source DataFrame. */
+  /** Plan and build against the configured source. */
   def build(
       spark: SparkSession,
       config: AppConfig,
       registry: Registry,
       observeMetrics: Boolean = false): Built = {
-    val src = registry.instantiateSource(config.source.name).read(spark, config.source.params)
-    buildOn(src, config.nodes, registry, observeMetrics)
+    val plan = Pipeline.plan(config.nodes, registry)
+    val read = registry.instantiateSource(config.source.name).read(spark, config.source.params)
+    val shared = Option.when(plan.roots.size > 1)(read.persist(StorageLevel.MEMORY_AND_DISK))
+    val built = plan.buildOn(shared.getOrElse(read), observeMetrics)
+    built.copy(persisted = shared.toList ++ built.persisted)
   }
 
-  /** Build against an explicit source (tests, streaming micro-batches). */
-  def buildOn(
-      source: DataFrame,
-      nodes: List[NodeConf],
-      registry: Registry,
-      observeMetrics: Boolean = false): Built = {
-    val activeRoots = plan(nodes, registry)
-    val persisted = scala.collection.mutable.ListBuffer[DataFrame]()
-    val src =
-      if (activeRoots.size > 1) {
-        val p = source.persist(StorageLevel.MEMORY_AND_DISK)
-        persisted += p; p
-      } else source
-    // Partition count for the `workers` floor decision, computed AT MOST
-    // ONCE per build (the old per-node observed.rdd.getNumPartitions
-    // compiled a throwaway physical plan per node per micro-batch) and
-    // only if some node actually configures workers > 1. Stages are
-    // narrow (select/filter/expand/mapPartitions), so the count is
-    // propagated statically through the tree below.
-    lazy val srcParts = src.rdd.getNumPartitions
-    def anyWorkers(ns: List[NodeConf]): Boolean =
-      ns.exists(n => !n.disabled && (n.workers > 1 || anyWorkers(n.children)))
-    val parts = if (anyWorkers(nodes)) srcParts else Int.MaxValue
-    Built(
-      src,
-      activeRoots.map(buildNode(src, parts, _, registry, observeMetrics, persisted)),
-      persisted.toList)
+  /** `leafKeys` key `Built.leaves` before any source exists: a stream
+    * checks its sinks against them before its first micro-batch. */
+  final class Plan private[Pipeline] (private[Pipeline] val roots: List[Node]) {
+
+    val leafKeys: List[String] = roots.flatMap(_.leafKeys)
+    private val setsWorkers = roots.exists(_.setsWorkers)
+
+    def buildOn(source: DataFrame, observeMetrics: Boolean = false): Built = {
+      val persisted = mutable.ListBuffer[DataFrame]()
+      val outputs = mutable.Map[String, DataFrame]()
+      // the `workers` floor's partition count: measured once per build,
+      // only if some node sets workers > 1, and propagated statically
+      // through the (narrow) stages below
+      val parts = if (setsWorkers) source.rdd.getNumPartitions else Int.MaxValue
+      val built = roots.map(buildNode(source, parts, _, observeMetrics, persisted, outputs))
+      Built(built, leafKeys.map(k => k -> outputs(k)), persisted.toList)
+    }
   }
 
   private def buildNode(
       input: DataFrame,
       inputParts: Int,
-      node: Planned,
-      registry: Registry,
+      node: Node,
       observe: Boolean,
-      persisted: scala.collection.mutable.ListBuffer[DataFrame]): BuiltNode = {
-    val Planned(conf, stage, activeChildren) = node
+      persisted: mutable.ListBuffer[DataFrame],
+      outputs: mutable.Map[String, DataFrame]): BuiltNode = {
+    val Node(conf, stage, handler, children) = node
     // discard_on_full_buffer load shedding (node/node.go:200-217): the
     // reference drops an event at delivery when the child's bounded
     // channel is full, instead of blocking the parent. Spark has no
@@ -240,7 +234,7 @@ object Pipeline {
     // split.deadLetters, a separate lineage from this node's input.
     val out0 = split.output
     val out =
-      if (activeChildren.size > 1) {
+      if (children.size > 1) {
         val p = out0.persist(StorageLevel.MEMORY_AND_DISK)
         persisted += p; p
       } else out0
@@ -249,12 +243,11 @@ object Pipeline {
       else out
 
     val errorHandlerOutput = for {
-      ehConf <- conf.errorHandler
+      h <- handler
       dead <- split.deadLetters
-    } yield {
-      val ehStage = registry.instantiateNode(ehConf.name, ehConf.params)
-      ErrorRouting(dead, ehStage).output
-    }
+    } yield ErrorRouting(dead, h).output
+    outputs += conf.id -> outObserved
+    errorHandlerOutput.foreach(outputs += errorsKey(conf.id) -> _)
 
     // static partition propagation assumes the stage is NARROW (true
     // of every built-in); a custom wide stage declares narrow=false
@@ -269,6 +262,6 @@ object Pipeline {
       outObserved,
       split.deadLetters,
       errorHandlerOutput,
-      activeChildren.map(buildNode(outObserved, childParts, _, registry, observe, persisted)))
+      children.map(buildNode(outObserved, childParts, _, observe, persisted, outputs)))
   }
 }

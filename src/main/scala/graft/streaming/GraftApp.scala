@@ -38,7 +38,7 @@ final class GraftApp private (
     * streams); Kafka deployments build the source via
     * `KafkaSourceConfig.stream` with offsets from
     * `recovery.onAssignment`. `sinks` are keyed by leaf, as
-    * `Pipeline.leafKeys` lists them: dead letters reach a sink as the
+    * `Pipeline.Plan.leafKeys` lists them: dead letters reach a sink as the
     * `<id>.errors` output of the node's error_handler (see
     * `StreamingPipeline.run`).
     */

@@ -21,6 +21,9 @@ import graft.sinks.Sink
   * them through unchanged. A sink key that names no leaf fails `run`
   * before the query starts; a leaf without a sink is not written.
   *
+  * The tree is planned once, before the query starts; every batch
+  * applies that `Pipeline.Plan`, so it writes the keys `run` checked.
+  *
   * This is SURVEY §7 hard part (a) handled structurally: the micro
   * batch is persisted ONCE, so success/filtered/error splits never
   * re-read the source, and all sinks observe a consistent batch.
@@ -39,7 +42,7 @@ import graft.sinks.Sink
   * rethrows the first failure with the others suppressed; writes that
   * committed before another failed are replayed with the whole batch
   * on restart, as a prefix of sequential writes would be, which is why
-  * every bundled sink is idempotent per (sink, batchId).
+  * every bundled sink is idempotent per (sink, query id, batch id).
   *
   * Reference semantics carried over (`executor/executor.go:142-207`):
   * source→roots broadcast and parent→children replication happen by
@@ -59,7 +62,7 @@ object StreamingPipeline {
       * them, so when this returns no write of the stream is running
       * and no sink is written to any more; writes that had already
       * committed are replayed with the batch. That is exactly why
-      * every bundled sink is idempotent per (sink, batchId)
+      * every bundled sink is idempotent per (sink, query id, batch id)
       * (`IdempotentParquetSink`, EsBulkSink doc-id upserts):
       * replay-safe sinks make cancel+rerun equivalent to a drain.
       * Non-idempotent custom sinks should drain explicitly (await a
@@ -78,11 +81,11 @@ object StreamingPipeline {
       sinks: Map[String, Sink],
       checkpoint: Option[String] = None,
       queryName: String = "graft-pipeline"): Running = {
-    val leaves = Pipeline.leafKeys(config.nodes, registry)
-    val unknown = sinks.keys.filterNot(leaves.contains).toList.sorted
+    val plan = Pipeline.plan(config.nodes, registry)
+    val unknown = sinks.keys.filterNot(plan.leafKeys.contains).toList.sorted
     if (unknown.nonEmpty)
       throw new IllegalArgumentException(
-        s"sink keys name no leaf of the tree: ${unknown.mkString(", ")}; leaves: ${leaves.mkString(", ")}")
+        s"sink keys name no leaf of the tree: ${unknown.mkString(", ")}; leaves: ${plan.leafKeys.mkString(", ")}")
 
     val writer = source.writeStream
       .queryName(queryName)
@@ -95,9 +98,9 @@ object StreamingPipeline {
         // leaks a persisted frame and a restart-supervised stream
         // bleeds storage memory failure after failure. The inner
         // finally unpersists the per-node MEMORY_AND_DISK caches
-        // Pipeline.buildOn created, after every write has ended.
+        // buildOn created, after every write has ended.
         try {
-          val built = Pipeline.buildOn(cached, config.nodes, registry, observeMetrics = true)
+          val built = plan.buildOn(cached, observeMetrics = true)
           try {
             val writes = built.leaves.flatMap { case (id, df) => sinks.get(id).map(Write(id, _, df)) }
             writeAll(writes, batchId, queryName)

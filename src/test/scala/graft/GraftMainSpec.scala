@@ -125,9 +125,35 @@ class GraftMainSpec extends SparkSpec {
       try {
         assert(built.leaves.map(_._1) == expected)
         // the keys GraftMain --stream writes are the same leaves
-        assert(graft.pipeline.Pipeline.leafKeys(cfg.nodes, reg) == expected)
+        assert(graft.pipeline.Pipeline.plan(cfg.nodes, reg).leafKeys == expected)
       } finally built.unpersistAll()
     }
+  }
+
+  test("a leaf write that throws still unpersists the batch build's cached frames") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft-main")
+    val in = dir.resolve("in").toString
+    Seq("a", "b", "c").toDF("payload").write.parquet(in)
+    // filternode has two children, so the build persists its output
+    val cfg = write(dir,
+      s"""application: cli-leak
+         |source:
+         |  name: stringsource
+         |  params: {path: $in}
+         |nodes:
+         |  - name: filternode
+         |    children:
+         |      - name: resultsnode
+         |      - name: resultsnode
+         |        id: secondleaf
+         |""".stripMargin)
+    // the output directory is a regular file: no leaf can be written
+    val out = Files.writeString(dir.resolve("out"), "not a directory").toString
+    spark.catalog.clearCache()
+    intercept[Exception](GraftMain.run(spark, cfg, out))
+    assert(spark.sharedState.cacheManager.isEmpty, "the failed run left frames cached")
   }
 
   test("missing config file is a readable error, not a crash") {

@@ -255,7 +255,7 @@ class AsyncStageSpec extends SparkSpec {
         .otherwise(concat(lit("event-"), col("id"))).as("payload"),
       current_timestamp().as("created"),
       lit(false).as("recovery"))
-    val built = Pipeline.buildOn(src, cfg.nodes, reg)
+    val built = Pipeline.plan(cfg.nodes, reg).buildOn(src)
     assert(built.find("resultsnode").get.output.count() == 36)
     assert(built.find("asyncrpcnode").get.errorHandlerOutput.get.count() == 2)
   }

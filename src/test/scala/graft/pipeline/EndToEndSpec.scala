@@ -150,7 +150,7 @@ class EndToEndSpec extends SparkSpec {
         concat(lit("event-"), col("id")).as("payload"),
         current_timestamp().as("created"),
         lit(false).as("recovery")).coalesce(1)
-      Pipeline.buildOn(src, cfg.nodes, reg).find("filternode").get.output
+      Pipeline.plan(cfg.nodes, reg).buildOn(src).find("filternode").get.output
     }
     val wide = build("    workers: 4")
     assert(wide.rdd.getNumPartitions >= 4,

@@ -68,7 +68,7 @@ class ErrorRoutingSpec extends SparkSpec {
          |        children:
          |          - name: resultsnode
          |""".stripMargin, reg).fold(e => sys.error(e), identity)
-    val built = Pipeline.buildOn(mix, cfg.nodes, reg)
+    val built = Pipeline.plan(cfg.nodes, reg).buildOn(mix)
     assert(built.persisted.isEmpty)
     val results = built.find("resultsnode").get.output
     val deadLetters = built.find("errornode").get.deadLetters.get
@@ -108,7 +108,7 @@ class ErrorRoutingSpec extends SparkSpec {
          |          - name: kafkaproducer
          |            id: downstream
          |""".stripMargin, reg).fold(e => sys.error(e), identity)
-    val built = Pipeline.buildOn(mix, cfg.nodes, reg)
+    val built = Pipeline.plan(cfg.nodes, reg).buildOn(mix)
     assert(built.persisted.isEmpty)
     // the reference's terminal nodes return nil — downstream gets nothing
     assert(built.find("downstream").isEmpty)
@@ -127,7 +127,7 @@ class ErrorRoutingSpec extends SparkSpec {
          |      - name: resultsnode
          |        disabled: true
          |""".stripMargin, reg).fold(e => sys.error(e), identity)
-    val built = Pipeline.buildOn(mix, cfg.nodes, reg)
+    val built = Pipeline.plan(cfg.nodes, reg).buildOn(mix)
     assert(built.persisted.isEmpty)
     assert(built.find("resultsnode").isEmpty)
     assert(built.find("filternode").get.children.isEmpty)

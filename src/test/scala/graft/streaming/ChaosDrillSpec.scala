@@ -186,6 +186,8 @@ class ChaosDrillSpec extends SparkSpec {
         Map("resultsnode" -> new IdempotentParquetSink(resultsDir),
           "asyncrpcnode.errors" -> new IdempotentParquetSink(dlqDir)),
         checkpoint = Some(cp))
+      // the sinks' commit key is (query id, batch id): B must resume A's query
+      assert(runB.query.id == runA.query.id, "a restart from the same checkpoint changed the query id")
       runB.query.processAllAvailable()
 
       // wave 3 proves B keeps consuming beyond the redelivery
@@ -317,8 +319,11 @@ class ChaosDrillSpec extends SparkSpec {
     assert(got == errors, s"errors: ${got.length} rows, expected ${errors.length}")
   }
 
-  private def committed(root: Path, key: String, batchId: Long): Boolean =
-    Files.exists(root.resolve(s"$key/batch=$batchId/_SUCCESS"))
+  /** the sink at `key` committed the stream's batch `batchId`: its
+    * commit key is (query id, batch id), and a restart from the same
+    * checkpoint keeps the query id */
+  private def committed(root: Path, key: String, run: StreamingPipeline.Running, batchId: Long): Boolean =
+    Files.exists(root.resolve(s"$key/batch=${run.query.id}_$batchId/_SUCCESS"))
 
   test("one of three sinks throws mid-batch: the batch waits for the others, a restart replays to exact counts") {
     val s = spark
@@ -341,7 +346,7 @@ class ChaosDrillSpec extends SparkSpec {
     intercept[StreamingQueryException] { run.query.awaitTermination() }
     // the batch returned only after its other writes ended: the slow one committed
     assert(!run.query.isActive && inFlight.get == 0, s"${inFlight.get} writes still running")
-    assert(committed(root, "results", 1) && committed(root, "copy", 1) && !committed(root, "errors", 1))
+    assert(committed(root, "results", run, 1) && committed(root, "copy", run, 1) && !committed(root, "errors", run, 1))
 
     // the sink stops throwing; the failed batch replays whole
     val again = startTree(s, root, "chaos-throw")((_, inner) => inner)
@@ -380,7 +385,7 @@ class ChaosDrillSpec extends SparkSpec {
     w2.toDF("v").write.mode("append").parquet(s"$root/in")
     assert(started.await(60, TimeUnit.SECONDS), "batch 1 never reached the slow write")
     // stop once the two fast writes of batch 1 have returned
-    def fastDone = committed(root, "errors", 1) && committed(root, "copy", 1) && fastInFlight.get == 0
+    def fastDone = committed(root, "errors", run, 1) && committed(root, "copy", run, 1) && fastInFlight.get == 0
     val deadline = System.currentTimeMillis() + 60000
     while (!fastDone && System.currentTimeMillis() < deadline) Thread.sleep(20)
     assert(fastDone, "the fast writes of batch 1 did not return")
@@ -398,7 +403,7 @@ class ChaosDrillSpec extends SparkSpec {
     val atStop = listing
     Thread.sleep(1500)
     assert(listing == atStop, "a sink directory changed after shutdown() returned")
-    assert(!committed(root, "results", 1))
+    assert(!committed(root, "results", run, 1))
 
     val again = startTree(s, root, name)((_, inner) => inner)
     try {

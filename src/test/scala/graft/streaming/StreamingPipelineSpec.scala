@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
-import graft.config.AppConfig
-import graft.pipeline.Registry
+import graft.config.{AppConfig, TypeTags}
+import graft.pipeline.{Pipeline, Registry, Stage, StageFactory}
 import graft.sinks.{CollectingSink, Sink}
 
 /** End-to-end streaming run of the reference's deterministic 10/5/3
@@ -193,7 +193,7 @@ class StreamingPipelineSpec extends SparkSpec {
       val mix = ((1 to 10).map(i => s"success $i") ++ (1 to 5).map(i => s"filterme $i"))
         .toDF("payload")
         .select(col("payload"), current_timestamp().as("created"), lit(false).as("recovery"))
-      val built = graft.pipeline.Pipeline.buildOn(mix, cfg.nodes, reg, observeMetrics = true)
+      val built = graft.pipeline.Pipeline.plan(cfg.nodes, reg).buildOn(mix, observeMetrics = true)
       assert(built.persisted.isEmpty)
       built.roots.head.output.collect() // action triggers listener
       // listener callbacks are async — poll for arrival
@@ -229,7 +229,7 @@ class StreamingPipelineSpec extends SparkSpec {
         .toDF("payload")
         .select(col("payload"), current_timestamp().as("created"), lit(false).as("recovery"))
         .repartition(1)
-      val built = graft.pipeline.Pipeline.buildOn(mix, cfg.nodes, reg, observeMetrics = true)
+      val built = graft.pipeline.Pipeline.plan(cfg.nodes, reg).buildOn(mix, observeMetrics = true)
       assert(built.persisted.isEmpty)
       val out = built.find("resultsnode").get.output.collect()
       assert(out.length == 7, s"expected the cap, got ${out.length}")
@@ -266,7 +266,7 @@ class StreamingPipelineSpec extends SparkSpec {
     val mix = (1 to 60).map(i => s"success $i").toDF("payload")
       .select(col("payload"), current_timestamp().as("created"), lit(false).as("recovery"))
       .repartition(1)
-    val built = graft.pipeline.Pipeline.buildOn(mix, cfg.nodes, reg)
+    val built = graft.pipeline.Pipeline.plan(cfg.nodes, reg).buildOn(mix)
     assert(built.persisted.isEmpty)
     val out = built.find("resultsnode").get.output
     assert(out.rdd.getNumPartitions == 3, "shed must not collapse parallelism")
@@ -298,7 +298,7 @@ class StreamingPipelineSpec extends SparkSpec {
     val mix = (1 to 60).map(i => s"success $i").toDF("payload")
       .select(col("payload"), current_timestamp().as("created"), lit(false).as("recovery"))
       .repartition(8)
-    val built = graft.pipeline.Pipeline.buildOn(mix, cfg.nodes, reg)
+    val built = graft.pipeline.Pipeline.plan(cfg.nodes, reg).buildOn(mix)
     assert(built.persisted.isEmpty)
     val out = built.find("resultsnode").get.output
     assert(out.rdd.getNumPartitions == 3, "shed must pin the channel count to workers")
@@ -316,7 +316,7 @@ class StreamingPipelineSpec extends SparkSpec {
         |        buffersize: 7
         |        discard_on_full_buffer: true
         |""".stripMargin, reg).fold(e => sys.error(e), identity)
-    val built1 = graft.pipeline.Pipeline.buildOn(mix, cfg1.nodes, reg)
+    val built1 = graft.pipeline.Pipeline.plan(cfg1.nodes, reg).buildOn(mix)
     assert(built1.persisted.isEmpty)
     assert(built1.find("resultsnode").get.output.count() == 7L)
   }
@@ -368,7 +368,7 @@ class StreamingPipelineSpec extends SparkSpec {
     val ts = Timestamp.valueOf("2024-01-01 00:00:00")
 
     val batch = events.toDF("payload").select(col("payload"), lit(ts).as("created"), lit(false).as("recovery"))
-    val built = graft.pipeline.Pipeline.buildOn(batch, kit.nodes, reg)
+    val built = graft.pipeline.Pipeline.plan(kit.nodes, reg).buildOn(batch)
     assert(built.persisted.isEmpty)
     // a node with two children still persists its output once
     val syslog = AppConfig.parse(
@@ -387,7 +387,7 @@ class StreamingPipelineSpec extends SparkSpec {
         |""".stripMargin, reg).fold(e => sys.error(e), identity)
     val lines = Seq("<13>2024-01-01T00:00:00Z h p[1]: a", "garbage").toDF("payload")
       .select(col("payload").cast("binary").as("payload"), lit(ts).as("created"), lit(false).as("recovery"))
-    val built2 = graft.pipeline.Pipeline.buildOn(lines, syslog.nodes, reg)
+    val built2 = graft.pipeline.Pipeline.plan(syslog.nodes, reg).buildOn(lines)
     try assert(built2.persisted.size == 1)
     finally built2.unpersistAll()
 
@@ -570,5 +570,56 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(ex.getMessage.contains("errornode;"), ex.getMessage)
     assert(ex.getMessage.contains("leaves: resultsnode, errornode.errors"), ex.getMessage)
     assert(s.streams.active.length == before, "a query started before the keys were checked")
+  }
+
+  test("a stream instantiates each stage once, however many micro-batches it runs") {
+    val s = spark
+    import s.implicits._
+    val builtins = Registry.builtins()
+    /** a built-in node type that counts its builds */
+    final class Counting(name: String, val consumes: String, val produces: String) extends StageFactory {
+      val builds = new AtomicInteger()
+      def build(params: Map[String, String]): Stage = { builds.incrementAndGet(); builtins.instantiateNode(name, params) }
+    }
+    val node = new Counting("errornode", Registry.StringT, Registry.StringT)
+    val handler = new Counting("errorhandlernode", TypeTags.EventError, TypeTags.EventError)
+    val reg = Registry.builtins()
+    reg.registerNodeType("countednode", node)
+    reg.registerNodeType("countedhandler", handler)
+    val cfg = AppConfig.parse(
+      """application: planonce
+        |source:
+        |  name: stringsource
+        |  params: {path: unused}
+        |nodes:
+        |  - name: countednode
+        |    error_handler:
+        |      name: countedhandler
+        |    children:
+        |      - name: resultsnode
+        |""".stripMargin, reg).fold(e => sys.error(e), identity)
+    val (node0, handler0) = (node.builds.get, handler.builds.get)
+    val input = MemoryStream[String](s)
+    val ts = Timestamp.valueOf("2024-01-01 00:00:00")
+    def envelope(df: DataFrame) = df.select(col("value").as("payload"), lit(ts).as("created"), lit(false).as("recovery"))
+    val results = new CollectingSink
+    val errors = new CollectingSink
+    val waves = (1 to 3).map(w => (1 to 6).map(i => if (i % 3 == 0) s"error $w-$i" else s"ok $w-$i"))
+    val running = StreamingPipeline.run(envelope(input.toDF()), cfg, reg, queryName = "planonce",
+      sinks = Map("resultsnode" -> results, "countednode.errors" -> errors))
+    try waves.foreach { w => input.addData(w); running.query.processAllAvailable() }
+    finally running.shutdown()
+    assert(node.builds.get - node0 == 1, "the node's stage was built more than once")
+    assert(handler.builds.get - handler0 == 1, "the error handler's stage was built more than once")
+
+    // each micro-batch wrote what a batch-mode build over its rows gives
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    assert(results.batches.size == 3 && errors.batches.size == 3)
+    for ((w, i) <- waves.zipWithIndex) {
+      val batch = Pipeline.plan(cfg.nodes, reg).buildOn(envelope(w.toDF("value"))).leaves.toMap
+      assert(results.batches.get(i).map(_.toString).toSeq.sorted == rows(batch("resultsnode")))
+      assert(errors.batches.get(i).map(_.toString).toSeq.sorted == rows(batch("countednode.errors")))
+      assert(errors.batches.get(i).length == 2)
+    }
   }
 }

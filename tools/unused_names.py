@@ -15,8 +15,11 @@ Each listed name carries two notes for the sweep's decision:
 The scan is lexical: a name shared with an unrelated identifier counts
 as used, so the list errs toward keeping names.
 
+A listed name that no spec uses (tests=0) and COVERAGE.md does not name
+is dead code: the scan prints it on a final DEAD line and fails.
+
 usage: python3 tools/unused_names.py [repo_root]
-exit status: 0 always; the list is for reading.
+exit status: 1 if a listed name is dead, else 0.
 """
 
 import os
@@ -116,10 +119,16 @@ def main():
         if program.get(name, 0) <= len(sites):
             for path, lineno, kind in sites:
                 listed.append((path, lineno, kind, name))
+    dead = []
     for path, lineno, kind, name in sorted(listed):
         notes = [f"tests={tests.get(name, 0)}"] + (["COVERAGE"] if name in coverage else [])
         print(f"{path}:{lineno}: {kind} {name}  {' '.join(notes)}")
+        if tests.get(name, 0) == 0 and name not in coverage:
+            dead.append(name)
     print(f"{len(listed)} unused names")
+    if dead:
+        print(f"DEAD (tests=0, no COVERAGE row): {', '.join(dead)}")
+        sys.exit(1)
 
 
 if __name__ == "__main__":
