@@ -1,6 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 
 /** Host-graph link quality: bounded-iteration PageRank over a
@@ -70,6 +75,21 @@ object LinkRank {
 
   val Scale: Long = 1000000000000L // 10^12 fixed point
   val PpmDen: Long = 1000000L
+
+  private val ObservationWait = 60.seconds
+
+  /** A materialized round's Observation row. The Observation completes
+    * only when an SQL action runs the observed plan, which is why a
+    * materialized `snap` must be one (an eager checkpoint); one that
+    * ran no action would leave `Observation.get` blocked forever, so
+    * this waits a bounded time, for the listener bus's delivery only,
+    * and then names the broken invariant. */
+  private def observed(obs: Observation): Row =
+    try Await.result(obs.future, ObservationWait)
+    catch {
+      case _: TimeoutException => throw new IllegalStateException(
+        s"round metrics not observed within $ObservationWait: a materialized snap must be an SQL action")
+    }
 
   /** PageRank after `iterations` exact-integer power iterations.
     *
@@ -170,6 +190,9 @@ object LinkRank {
     // (measured 26.6 s vs 12.6 s on the 1M-host/8M-edge probe when
     // they were snapshotted too). The lazy path keeps persist
     // everywhere: construction must stay zero-job.
+    // A materialized `snap` must be an SQL action (an eager checkpoint):
+    // each round reads its dangling mass from an Observation that only
+    // an action completes (`observed`).
     val snap: DataFrame => DataFrame =
       if (!materialize) _.persist()
       else if (sess.sparkContext.getCheckpointDir.isDefined) _.checkpoint(true)
@@ -233,14 +256,14 @@ object LinkRank {
           .groupBy(col("dst").as("host")).agg(sum(col("share")).as("inc"))
         val base = if (n == 0L) 0L else (Scale - Scale * dampingPpm / PpmDen) / n
         val dDivN = if (n == 0L) 0L else dangle / n
-        val obs = new org.apache.spark.sql.Observation()
+        val obs = new Observation()
         ranks = snap(deg0.join(incoming, Seq("host"), "left")
           .select(col("host"), col("outdeg"),
             expr(s"$base + $dampingPpm * (coalesce(inc, 0L) + $dDivN) div $PpmDen")
               .as("rank"))
           .observe(obs,
             coalesce(sum(when(col("outdeg") === 0L, col("rank"))), lit(0L)).as("dangle")))
-        dangle = obs.get("dangle").asInstanceOf[Long]
+        dangle = observed(obs).getAs[Long]("dangle")
       }
     } else {
       val nn = deg0.agg(count(lit(1)).as("n"))

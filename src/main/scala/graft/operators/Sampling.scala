@@ -255,17 +255,22 @@ object Sampling {
       else pow(col("__n").cast("double"), lit(1.0 / temperature))
     val weights = df.groupBy(groupCol).agg(sum(tokCol).as("__n"))
       .select(col(groupCol), wCol.as("__w"))
+    // a null source is a group of its own (as in groupedHashCumsum),
+    // folded last, where an SQL engine's ORDER BY puts NULL by default
     val z = weights.agg(
       aggregate(
-        array_sort(collect_list(struct(col(groupCol).as("g"), col("__w").as("w")))),
+        array_sort(collect_list(
+          struct(col(groupCol).isNull.as("n"), col(groupCol).as("g"), col("__w").as("w")))),
         lit(0.0), (acc, x) => acc + x.getField("w")).as("__z"))
     val budgets = weights.crossJoin(broadcast(z))
-      .select(col(groupCol),
+      .select(col(groupCol).as("__bg"),
         floor(lit(totalBudget.toDouble) * col("__w") / col("__z")).cast("long").as("__budget"))
+    // null-safe join on a renamed key: keeps the null group's rows and
+    // the input's column order, which a USING join would both lose
     groupedHashCumsum(df, groupCol, keyCol, tokCol, seed, buckets)
-      .join(broadcast(budgets), Seq(groupCol))
+      .join(broadcast(budgets), col(groupCol) <=> col("__bg"))
       .filter(col("cum_tokens") <= col("__budget"))
-      .drop("__budget")
+      .drop("__bg", "__budget")
   }
 
   /** Deterministic weighted source interleaving (stride scheduling):

@@ -12,10 +12,13 @@ import org.apache.spark.sql.functions._
   *   - successes → expanded (fanout) then projected, delivered to all
   *     children
   *
-  * All three branches derive from ONE declarative plan; in batch mode
-  * the caller persists the input when it fans out to >1 consumer, and
-  * in streaming mode the split runs inside foreachBatch on a cached
-  * micro-batch — the source is never read twice (SURVEY §7 hard part a).
+  * All three branches derive from ONE declarative plan, and none of
+  * them is cached: each consumer re-derives the split from the build's
+  * input, the one frame a build caches (`Pipeline.build` persists the
+  * read source of a branching tree, a stream persists each micro
+  * batch) — the source is
+  * never read twice (SURVEY §7 hard part a). Only an async stage's
+  * call result is cached, by [[callOnce]].
   */
 object ErrorRouting {
 

@@ -11,20 +11,23 @@ import graft.config.{AppConfig, NodeConf}
 /** Plans a validated config tree once, then folds it into a DataFrame
   * DAG. `plan` instantiates every stage, as the reference does once at
   * startup (`node/node.go:76-127`); batch mode applies the immutable
-  * [[Plan]] once, a stream applies it to every micro-batch. `buildOn`
-  * never persists its source: `build` persists the read source when
-  * the tree has >1 active root, a stream persists each micro-batch.
+  * [[Plan]] once, a stream applies it to every micro-batch. A build
+  * caches at most one frame, its input: `buildOn` persists nothing,
+  * `build` persists the read source when the tree branches, and a
+  * stream persists each micro-batch.
   *
   * Mapping of the reference's execution semantics
   * (`executor/executor.go:142-207`) onto Spark:
   *
   *   - source→roots broadcast + parent→children replication
   *     (`executor/executor.go:183-186`, `node/node.go:190-194`): the
-  *     same DataFrame is reused by every consumer; the source of a tree
-  *     with >1 active root, and the output of a node with >1 active
-  *     child, are persisted so the upstream work runs once. The error
-  *     handler is not a consumer of the output: it reads the
-  *     dead-letter lineage of the node's input.
+  *     same DataFrame is reused by every consumer, as the reference
+  *     hands each event to every child by reference. Node outputs are
+  *     never cached: every stage must be deterministic (see `Stage`),
+  *     so each leaf re-derives its narrow stage chain from the one
+  *     cached input, which keeps the source read once. The error handler is not a
+  *     consumer of the output: it reads the dead-letter lineage of the
+  *     node's input.
   *   - per-node workers (`executor/executor.go:319-337`): a partition
   *     floor — the node's input is repartitioned up when it plans to
   *     fewer partitions than its configured workers (see buildNode).
@@ -54,9 +57,9 @@ object Pipeline {
       roots: List[BuiltNode],
       /** terminal outputs (leaves + error handler outputs), as `Plan.leafKeys` */
       leaves: List[(String, DataFrame)],
-      /** every frame this build persisted (shared source + multi-child
-        * node outputs) — streaming callers MUST unpersist these after each
-        * micro-batch or a long-running stream accumulates cached blocks */
+      /** the frame this build persisted: `build`'s read source when the
+        * tree branches, else nothing — callers unpersist it once the
+        * leaves are written */
       persisted: List[DataFrame]) {
     def find(id: String): Option[BuiltNode] = roots.view.flatMap(_.find(id)).headOption
     def unpersistAll(): Unit = persisted.foreach(_.unpersist())
@@ -71,6 +74,7 @@ object Pipeline {
       (if (children.isEmpty) List(conf.id) else children.flatMap(_.leafKeys)) ++
         handler.map(_ => errorsKey(conf.id))
     def setsWorkers: Boolean = conf.workers > 1 || children.exists(_.setsWorkers)
+    def branches: Boolean = children.size > 1 || children.exists(_.branches)
   }
 
   private def errorsKey(id: String): String = s"$id.errors"
@@ -98,9 +102,8 @@ object Pipeline {
       observeMetrics: Boolean = false): Built = {
     val plan = Pipeline.plan(config.nodes, registry)
     val read = registry.instantiateSource(config.source.name).read(spark, config.source.params)
-    val shared = Option.when(plan.roots.size > 1)(read.persist(StorageLevel.MEMORY_AND_DISK))
-    val built = plan.buildOn(shared.getOrElse(read), observeMetrics)
-    built.copy(persisted = shared.toList ++ built.persisted)
+    val shared = Option.when(plan.branches)(read.persist(StorageLevel.MEMORY_AND_DISK))
+    plan.buildOn(shared.getOrElse(read), observeMetrics).copy(persisted = shared.toList)
   }
 
   /** `leafKeys` key `Built.leaves` before any source exists: a stream
@@ -109,16 +112,18 @@ object Pipeline {
 
     val leafKeys: List[String] = roots.flatMap(_.leafKeys)
     private val setsWorkers = roots.exists(_.setsWorkers)
+    /** more than one consumer reads the source: >1 active root, or a
+      * node with >1 active child, whose output each child re-derives */
+    private[Pipeline] val branches = roots.size > 1 || roots.exists(_.branches)
 
     def buildOn(source: DataFrame, observeMetrics: Boolean = false): Built = {
-      val persisted = mutable.ListBuffer[DataFrame]()
       val outputs = mutable.Map[String, DataFrame]()
       // the `workers` floor's partition count: measured once per build,
       // only if some node sets workers > 1, and propagated statically
       // through the (narrow) stages below
       val parts = if (setsWorkers) source.rdd.getNumPartitions else Int.MaxValue
-      val built = roots.map(buildNode(source, parts, _, observeMetrics, persisted, outputs))
-      Built(built, leafKeys.map(k => k -> outputs(k)), persisted.toList)
+      val built = roots.map(buildNode(source, parts, _, observeMetrics, outputs))
+      Built(built, leafKeys.map(k => k -> outputs(k)), Nil)
     }
   }
 
@@ -127,7 +132,6 @@ object Pipeline {
       inputParts: Int,
       node: Node,
       observe: Boolean,
-      persisted: mutable.ListBuffer[DataFrame],
       outputs: mutable.Map[String, DataFrame]): BuiltNode = {
     val Node(conf, stage, handler, children) = node
     // discard_on_full_buffer load shedding (node/node.go:200-217): the
@@ -165,8 +169,8 @@ object Pipeline {
     // (outcome columns only), so the count is identical. ANCESTOR
     // nodes' counters stay above the break and are not observable for
     // the async subtree's lineage — the accepted cost of the
-    // exactly-once RPC guard (recompute-on-eviction with persist()
-    // would re-fire RPCs); a chain's parent.emitted is recoverable as
+    // exactly-once RPC guard (a cache's recompute-on-eviction would
+    // re-fire RPCs); a chain's parent.emitted is recoverable as
     // the async node's own `received` (1:1), asserted in
     // ChaosDrillSpec. The same break swallows THIS node's `.offered`
     // counter when discard_on_full_buffer is combined with an async
@@ -230,17 +234,12 @@ object Pipeline {
 
     val split = ErrorRouting(observed, routed)
 
-    // Only the children read the output; the error handler reads
-    // split.deadLetters, a separate lineage from this node's input.
-    val out0 = split.output
-    val out =
-      if (children.size > 1) {
-        val p = out0.persist(StorageLevel.MEMORY_AND_DISK)
-        persisted += p; p
-      } else out0
+    // Only the children read the output, each re-deriving it from the
+    // build's input; the error handler reads split.deadLetters, a
+    // separate lineage from this node's input.
     val outObserved =
-      if (observe) out.observe(s"${conf.id}.emitted", count(lit(1)).as("count"))
-      else out
+      if (observe) split.output.observe(s"${conf.id}.emitted", count(lit(1)).as("count"))
+      else split.output
 
     val errorHandlerOutput = for {
       h <- handler
@@ -262,6 +261,6 @@ object Pipeline {
       outObserved,
       split.deadLetters,
       errorHandlerOutput,
-      children.map(buildNode(outObserved, childParts, _, observe, persisted, outputs)))
+      children.map(buildNode(outObserved, childParts, _, observe, outputs)))
   }
 }

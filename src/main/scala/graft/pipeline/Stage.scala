@@ -24,6 +24,12 @@ import org.apache.spark.sql.{Column, DataFrame}
   *   - `expand`: 1→N fanout (`node/node.go:30-33`) — an array column to
   *     explode, applied before `project`. Empty array = filtered.
   *   - `project`: the payload transform (SyncNode's map step).
+  *
+  * A stage must be deterministic (no rand/uuid/current_timestamp, no
+  * order-dependent pick after a shuffle): no node's output is cached,
+  * so a node with more than one child re-runs its stage once per
+  * child's write, including any shuffle of a `narrow = false` stage,
+  * and every child must still see the same rows.
   */
 final case class Stage(
     failWhen: Option[FailSpec] = None,
@@ -44,7 +50,8 @@ final case class Stage(
       * transform SHUFFLES (groupBy, join, repartition) must set
       * narrow=false so the per-node `workers` floor re-measures the
       * actual partition count downstream instead of trusting the
-      * static estimate (Pipeline.buildNode). */
+      * static estimate (Pipeline.buildNode). Under a node with more
+      * than one child that shuffle runs once per child. */
     narrow: Boolean = true)
 
 /** Error predicate + structured error columns (reference FBError,

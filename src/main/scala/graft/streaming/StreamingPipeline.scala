@@ -25,8 +25,11 @@ import graft.sinks.Sink
   * applies that `Pipeline.Plan`, so it writes the keys `run` checked.
   *
   * This is SURVEY §7 hard part (a) handled structurally: the micro
-  * batch is persisted ONCE, so success/filtered/error splits never
-  * re-read the source, and all sinks observe a consistent batch.
+  * batch is persisted ONCE, and it is the only frame cached. Every leaf
+  * re-derives its stage chain from it, so success/filtered/error
+  * splits never re-read the source, and all sinks observe one
+  * consistent batch (a Kafka source runs with failOnDataLoss=false, so
+  * a second read could differ).
   *
   * A micro-batch's writes run concurrently, as the reference runs
   * every node in its own goroutines (`executor/executor.go:319-337`):
@@ -46,7 +49,8 @@ import graft.sinks.Sink
   *
   * Reference semantics carried over (`executor/executor.go:142-207`):
   * source→roots broadcast and parent→children replication happen by
-  * DataFrame reuse; `buffersize` maps to maxOffsetsPerTrigger on the
+  * DataFrame reuse over the cached batch, never by caching a node's
+  * output; `buffersize` maps to maxOffsetsPerTrigger on the
   * source; graceful shutdown = stop() after the in-flight batch
   * completes (micro-batch boundaries replace channel draining).
   */
@@ -92,19 +96,15 @@ object StreamingPipeline {
       .trigger(Trigger.ProcessingTime(0L))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val cached = batch.persist()
-        // the OUTER finally guards the micro-batch cache even when
-        // buildOn itself throws (a schema-dependent node expression can
-        // fail analysis per batch) — without it every failed batch
-        // leaks a persisted frame and a restart-supervised stream
-        // bleeds storage memory failure after failure. The inner
-        // finally unpersists the per-node MEMORY_AND_DISK caches
-        // buildOn created, after every write has ended.
+        // the finally guards the micro-batch cache even when buildOn
+        // itself throws (a schema-dependent node expression can fail
+        // analysis per batch) — without it every failed batch leaks a
+        // persisted frame and a restart-supervised stream bleeds
+        // storage memory failure after failure
         try {
           val built = plan.buildOn(cached, observeMetrics = true)
-          try {
-            val writes = built.leaves.flatMap { case (id, df) => sinks.get(id).map(Write(id, _, df)) }
-            writeAll(writes, batchId, queryName)
-          } finally { built.unpersistAll(); () }
+          val writes = built.leaves.flatMap { case (id, df) => sinks.get(id).map(Write(id, _, df)) }
+          writeAll(writes, batchId, queryName)
         } finally { cached.unpersist(); () }
       }
 

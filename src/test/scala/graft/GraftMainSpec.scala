@@ -136,7 +136,7 @@ class GraftMainSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-main")
     val in = dir.resolve("in").toString
     Seq("a", "b", "c").toDF("payload").write.parquet(in)
-    // filternode has two children, so the build persists its output
+    // filternode has two children, so the build persists its source
     val cfg = write(dir,
       s"""application: cli-leak
          |source:

@@ -71,6 +71,20 @@ class SamplingSpec extends SparkSpec {
     assert(Seq(nat, damped, flat).forall(_.values.sum <= 2000L))
   }
 
+  test("temperature mixture keeps a null source as a group and the input's column order") {
+    import spark.implicits._
+    // two sources of 400 tokens each, one of them null: equal sqrt
+    // weights (20 and 20 of z = 40), so each gets exactly half of 400
+    val df = ((1 to 40).map(i => (i.toLong, Option("s0"), 10L)) ++
+        (1 to 40).map(i => (100L + i, Option.empty[String], 10L)))
+      .toDF("doc_id", "source", "n_tokens")
+    val out = Sampling.mixtureByTemperature(df, "source", "doc_id", "n_tokens", totalBudget = 400L)
+    val kept = out.groupBy("source").agg(sum("n_tokens")).collect()
+      .map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
+    assert(kept == Map(Some("s0") -> 200L, None -> 200L))
+    assert(out.columns.toSeq == Seq("doc_id", "source", "n_tokens", "cum_tokens"))
+  }
+
   test("samplePerGroup caps group size and is deterministic") {
     import spark.implicits._
     val df = (1 to 300).map(i => (s"g${i % 3}", i.toLong)).toDF("g", "id")

@@ -139,10 +139,9 @@ class AsyncStageSpec extends SparkSpec {
 
   test("the RPC fires exactly once per row per micro-batch while a stream writes both branches concurrently") {
     // the kit tree of the streaming benchmark plus a second child under
-    // the async node: its two children's leaves (through the node's
-    // output, persisted for two children) and its error handler's leaf
-    // are three concurrent writes, all reading the node's lazy
-    // localCheckpoint
+    // the async node: its two children's leaves (each re-deriving the
+    // node's uncached output) and its error handler's leaf are three
+    // concurrent writes, all reading the node's lazy localCheckpoint
     val calls = spark.sparkContext.longAccumulator("rpc_calls_stream")
     val reg = Registry.builtins()
     reg.registerNodeType("countingrpcnode", new StageFactory {

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CacheEntries
 
 import graft.SparkSpec
 import graft.config.AppConfig
@@ -187,5 +188,42 @@ class EndToEndSpec extends SparkSpec {
     // 100 events × 2 ms across ≤32 partitions: the slowest partition
     // carries ≥ 4 events → ≥ 8 ms of injected latency
     assert(elapsedMs >= 8.0, s"latency not injected: $elapsedMs ms")
+  }
+
+  test("a batch build caches only its source, and only when the tree branches") {
+    val src = spark.range(100).select(concat(lit("event-"), col("id")).as("payload"),
+      current_timestamp().as("created"), lit(false).as("recovery"))
+    val reg = Registry.builtins()
+    reg.registerSourceType("fixedsource", new SourceFactory {
+      val produces = "string"
+      def read(spark: SparkSession, params: Map[String, String]): DataFrame = src
+    })
+    def build(nodes: String): Pipeline.Built = Pipeline.build(spark, AppConfig.parse(
+      "application: onecache\nsource:\n  name: fixedsource\nnodes:\n" + nodes.stripMargin, reg)
+      .fold(e => fail(s"config rejected: $e"), identity), reg)
+    val cache = spark.sharedState.cacheManager
+    cache.clearCache()
+    // filternode has two children: both re-derive its output from the cached source
+    val branching = build(
+      """  - name: filternode
+        |    children:
+        |      - name: resultsnode
+        |      - name: resultsnode
+        |        id: second
+        |""")
+    try {
+      assert(branching.persisted.size == 1 && (branching.persisted.head eq src))
+      assert(CacheEntries(spark) == 1)
+      assert(branching.leaves.map { case (k, df) => k -> df.count() } == List("resultsnode" -> 100L, "second" -> 100L))
+    } finally branching.unpersistAll()
+    assert(cache.isEmpty)
+    // a chain reads its source once and caches nothing
+    val chain = build(
+      """  - name: filternode
+        |    children:
+        |      - name: resultsnode
+        |""")
+    assert(chain.persisted.isEmpty && cache.isEmpty)
+    assert(chain.leaves.map { case (k, df) => k -> df.count() } == List("resultsnode" -> 100L))
   }
 }

@@ -10,6 +10,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CacheEntries
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
@@ -321,7 +322,7 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(built1.find("resultsnode").get.output.count() == 7L)
   }
 
-  test("only nodes with several children persist their output; an error handler is no consumer") {
+  test("no node persists its output, however many children it has; an error handler is no consumer") {
     val s = spark
     import s.implicits._
     val reg = Registry.builtins()
@@ -370,7 +371,7 @@ class StreamingPipelineSpec extends SparkSpec {
     val batch = events.toDF("payload").select(col("payload"), lit(ts).as("created"), lit(false).as("recovery"))
     val built = graft.pipeline.Pipeline.plan(kit.nodes, reg).buildOn(batch)
     assert(built.persisted.isEmpty)
-    // a node with two children still persists its output once
+    // nor does a node with two children: each child re-derives its output
     val syslog = AppConfig.parse(
       """application: persisttest
         |source:
@@ -388,8 +389,7 @@ class StreamingPipelineSpec extends SparkSpec {
     val lines = Seq("<13>2024-01-01T00:00:00Z h p[1]: a", "garbage").toDF("payload")
       .select(col("payload").cast("binary").as("payload"), lit(ts).as("created"), lit(false).as("recovery"))
     val built2 = graft.pipeline.Pipeline.plan(syslog.nodes, reg).buildOn(lines)
-    try assert(built2.persisted.size == 1)
-    finally built2.unpersistAll()
+    assert(built2.persisted.isEmpty)
 
     // sink rows and node counters of one micro-batch through the kit tree
     val metrics = new PipelineMetrics(s).install()
@@ -537,6 +537,59 @@ class StreamingPipelineSpec extends SparkSpec {
       assert(docs.size == 1 && docs.head.contains(s""""event":"$bad",""") &&
         docs.head.contains(""""error":{"code":"ERR_PARSE","""), docs)
     } finally running.shutdown()
+  }
+
+  test("a stream caches one frame, its micro-batch: no node output is cached beside it") {
+    val s = spark
+    import s.implicits._
+    val reg = Registry.builtins()
+    // syslogparser has two children and an error handler: three writes
+    val cfg = AppConfig.parse(
+      """application: onecache
+        |source:
+        |  name: parquetsource
+        |  params: {path: unused}
+        |nodes:
+        |  - name: syslogparser
+        |    error_handler:
+        |      name: errorkafkaproducer
+        |      params: {topic: syslog-errors}
+        |    children:
+        |      - name: jsonbuilder
+        |        params: {topic: logs-json}
+        |        children:
+        |          - name: kafkaproducer
+        |      - name: docbuilder
+        |        params: {index: logs}
+        |        children:
+        |          - name: elasticsearch
+        |""".stripMargin, reg).fold(e => sys.error(e), identity)
+    // records the session's cache entries as each write starts
+    final class ProbeSink extends Sink {
+      val cached = new ConcurrentLinkedQueue[Int]()
+      val rows = new AtomicInteger()
+      def writeBatch(df: DataFrame, batchId: Long): Unit = {
+        cached.add(CacheEntries(s))
+        rows.addAndGet(df.collect().length)
+        ()
+      }
+    }
+    s.sharedState.cacheManager.clearCache()
+    val input = MemoryStream[String](s)
+    val source = input.toDF().select(col("value").cast("binary").as("payload"),
+      lit(Timestamp.valueOf("2024-01-01 00:00:00")).as("created"), lit(false).as("recovery"))
+    val sinks = Seq("kafkaproducer", "elasticsearch", "syslogparser.errors").map(_ -> new ProbeSink).toMap
+    val running = StreamingPipeline.run(source, cfg, reg, sinks = sinks, queryName = "onecache")
+    try for (b <- 1 to 3) {
+      input.addData((1 to 5).map(i => s"<13>2024-01-01T00:00:0${i}Z host$i app[$i]: msg $b") :+ "garbage")
+      running.query.processAllAvailable()
+      assert(CacheEntries(s) == 0, s"batch $b left ${CacheEntries(s)} frames cached")
+    } finally running.shutdown()
+    // three writes share the one cached batch: no node output is cached beside it
+    assert(sinks.map { case (k, p) => k -> p.cached.asScala.toList } ==
+      Map("kafkaproducer" -> List(1, 1, 1), "elasticsearch" -> List(1, 1, 1), "syslogparser.errors" -> List(1, 1, 1)))
+    assert(sinks.map { case (k, p) => k -> p.rows.get } ==
+      Map("kafkaproducer" -> 15, "elasticsearch" -> 15, "syslogparser.errors" -> 3))
   }
 
   test("a sink key that names no leaf is rejected before the query starts") {
